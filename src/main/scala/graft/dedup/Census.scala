@@ -2,15 +2,15 @@ package graft.dedup
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** The census/cap discipline shared by every pair generator in the
   * engine (text LSH, image dHash bands, video frame hashes, audio
   * fingerprints): any key whose bucket would square a join is MEASURED
   * first and either capped (explicit), uncapped (0), or capped at a
   * census-derived default (-1) — never trusted to be well-behaved at
-  * 100 TB. Moved here (round 15) from `graft.multimodal.Multimodal` so
-  * the dedup-side streamed append ([[Dedup.appendToLshIndex]]) shares
-  * one implementation with the media paths instead of growing a twin.
+  * 100 TB. The three segment-store appends (LSH, Hamming, audio) share
+  * their census block, [[appendCensus]], here.
   *
   * Also home of the STORE-WIDE cap statistics for the streamed-append
   * family (round-15 ADVICE fix): a census-derived default computed over
@@ -62,10 +62,87 @@ private[graft] object Census {
      withCap.filter(col("n") > col("cap")))
   }
 
+  /** The batch-bounded frames one segment-store append materialises,
+    * released together in the append's `finally` — after the report and
+    * the `dropped/` census are written, and on every failure path, so a
+    * streaming query appending per micro-batch never accumulates caches. */
+  private[graft] final class Materialised {
+    private val held = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    /** Persist (MEMORY_AND_DISK, so a lost executor recomputes) without
+      * running: for frames an action over them materialises anyway. */
+    def keep(df: DataFrame): DataFrame = {
+      held += df; df.persist(StorageLevel.MEMORY_AND_DISK)
+    }
+    /** [[keep]] plus an eager count: the frame's plan runs once, here.
+      * Later references read the cached rows through an RDD scan
+      * ([[org.apache.spark.sql.graft.SqlBridge.rddScan]]): a plan over a
+      * cached frame embeds that frame's plan, so along an append's chain
+      * of frames the plan strings AQE rebuilds at every stage grew to
+      * ~23,000 lines (measured: 4.5 s → 2.9 s per 200-doc LSH append). */
+    def apply(df: DataFrame): DataFrame = {
+      keep(df).count(); org.apache.spark.sql.graft.SqlBridge.rddScan(df)
+    }
+    def frames: Seq[DataFrame] = held.toSeq
+    def release(): Unit = held.foreach(_.unpersist(true))
+  }
+
+  /** The capped census block of every segment-store append (LSH bands,
+    * Hamming bands, audio fingerprints): the store's postings are
+    * semi-joined to the batch's `keys` — a key absent from the batch
+    * forms no new pair — then (old ∪ new) is counted per key and
+    * [[hotKeyPrune]]d. Returns (batch postings on kept keys, store
+    * postings on kept keys, dropped census); under `cap == 0` the
+    * inputs pass through and dropped is null (no census is computed).
+    *
+    * `oldRelevant` (the store rows in the batch's keys) and `ok` (the
+    * kept keys) are [[Materialised]]: each is bounded by the batch, and
+    * the pair plans downstream refer to each two or three times, and
+    * AQE runs every reference again (see [[Dedup.lshAppendPairs]] for
+    * the measured cost). Never a corpus-sized frame: under `cap == 0`
+    * the store side is the whole store and is not materialised here.
+    * Batch-derived frames are broadcast only when `broadcastBatch`. */
+  def appendCensus(oldPostings: DataFrame, newPostings: DataFrame,
+      keys: Seq[String], cap: Long, broadcastBatch: Boolean,
+      mat: Materialised): (DataFrame, DataFrame, DataFrame) =
+    if (cap == 0L) (newPostings, oldPostings, null)
+    else {
+      def hint(df: DataFrame) = if (broadcastBatch) broadcast(df) else df
+      val k = keys.map(col)
+      val oldRelevant = mat(oldPostings.join(
+        hint(newPostings.select(k: _*).distinct()), keys, "left_semi"))
+      val census = oldRelevant.select(k: _*)
+        .unionByName(newPostings.select(k: _*))
+        .groupBy(k: _*).agg(count(lit(1)).as("n"))
+      val (ok0, drop) = hotKeyPrune(census, keys, cap)
+      val ok = mat(ok0)
+      (newPostings.join(hint(ok), keys), oldRelevant.join(hint(ok), keys),
+        drop)
+    }
+
   /** The census-derived default cap over store-wide totals:
     * `max(256, 32 × ceil(s/k))`. */
   def derivedCap(s: Long, k: Long): Long =
     if (k <= 0L) 256L else math.max(256L, 32L * ((s + k - 1) / k))
+
+  /** One segment's cap statistics: (`s` posting rows, `k` distinct
+    * `keys`) — one small aggregate. */
+  def postingStats(postings: DataFrame, keys: Seq[String]): (Long, Long) = {
+    val st = postings.agg(count(lit(1)).as("s"),
+      count_distinct(struct(keys.map(col): _*)).as("k")).head()
+    (st.getLong(0), st.getLong(1))
+  }
+
+  /** An append's effective cap: `maxBucket` unless -1, which derives
+    * from the store-wide capstats plus this batch's `(bRows, bKeys)` (the
+    * drift argument in the object scaladoc). A store built before
+    * capstats existed keeps -1, the batch-restricted derive inside
+    * [[hotKeyPrune]], conservative-only once the store carries stats. */
+  def appendCap(spark: SparkSession, storePath: String, batchId: String,
+      maxBucket: Long, bRows: Long, bKeys: Long): Long =
+    if (maxBucket != -1L) maxBucket
+    else readCapStats(spark, storePath, excludeBatch = batchId)
+      .map { case (s0, k0) => derivedCap(s0 + bRows, k0 + bKeys) }
+      .getOrElse(-1L)
 
   /** Persist one batch's cap statistics (`s` rows, `k` distinct keys)
     * as the store's `capstats/batch=<id>` segment — overwritten on

@@ -813,10 +813,9 @@ object Dedup {
       .write.mode("overwrite").parquet(s"$path/bands/batch=base")
     // seed the STORE-WIDE cap statistics ([[Census]] scaladoc): exact at
     // build time, appends accumulate their own one-row segments
-    val st = spark.read.parquet(s"$path/bands/batch=base")
-      .agg(count(lit(1)).as("s"),
-        count_distinct(struct(col("band"), col("h"))).as("k")).head()
-    Census.writeCapStats(spark, path, "base", st.getLong(0), st.getLong(1))
+    val (rows, keys) = Census.postingStats(
+      spark.read.parquet(s"$path/bands/batch=base"), Seq("band", "h"))
+    Census.writeCapStats(spark, path, "base", rows, keys)
   }
 
   /** Append a document batch to a [[buildLshIndex]] store and return the
@@ -828,28 +827,30 @@ object Dedup {
     * census bound `broadcastMaxBatchRows`) BROADCAST against the store's
     * band table — the corpus-sized side is scanned once and never
     * shuffled; a backfill-sized batch degrades to an AQE-picked shuffle
-    * join instead of OOMing the driver. The shingle fetch joins are
-    * semi-join-pruned to candidate ids exactly as in [[minhashLshPairs]].
+    * join instead of OOMing the driver. Each stage runs once: the
+    * batch's shingle and band tables, the store rows in its buckets, the
+    * kept buckets, the candidate pairs and their shingle rows are
+    * materialised (all batch-bounded; see [[lshAppendPairs]]), and the
+    * report, the `dropped/` census and the store writes read them.
     *
-    * Hot-bucket cap (round 15 — this was the ONE pair generator outside
-    * the engine's cap policy): `maxBucket` censuses the batch's
-    * `(band, h)` buckets over (store ∪ batch) and drops buckets above
-    * the cap from pair generation, persisting the dropped census to
+    * Hot-bucket cap: `maxBucket` censuses the batch's `(band, h)`
+    * buckets over (store ∪ batch) and drops buckets above the cap from
+    * pair generation, persisting the dropped census to
     * `dropped/batch=<id>` next to the pairs segment (`> 0` explicit,
-    * `0` off, `-1` DEFAULT: derived from the store-wide capstats —
-    * see [[Census]] — so one degenerate boilerplate bucket in a 100 TB
-    * store can no longer square every trigger's candidate set, and a
-    * skewed batch cannot inflate the cap). See [[lshAppendPairs]] for
-    * the append-time-consistency contract.
+    * `0` off, `-1` DEFAULT: derived from the store-wide capstats — see
+    * [[Census]] — so one degenerate boilerplate bucket cannot square
+    * every trigger's candidate set, and a skewed batch cannot inflate
+    * the cap). See [[lshAppendPairs]] for the append-time-consistency
+    * contract.
     *
     * Durability/ordering: the pair report is WRITTEN TO DISK
     * (`pairs/batch=<id>`) before the store gains the batch's
     * `meta/bands/batch=<id>` segments, and the returned frame reads that
     * written report — so no plan re-execution can observe the
-    * post-append store and double-count (a lazily re-executed plan over
-    * a mutated store is exactly how a subtle ×2 pair bug crept in during
-    * development). Re-running the same `batchId` overwrites all three
-    * segments — idempotent re-ingest. */
+    * post-append store and double-count. Re-running the same `batchId`
+    * overwrites all three segments — idempotent re-ingest, also after an
+    * append that failed midway (every cached frame is released in a
+    * `finally`). */
   def appendToLshIndex(spark: org.apache.spark.sql.SparkSession, path: String,
       newDocs: DataFrame, idCol: String, textCol: String, batchId: String,
       shingleN: Int = 3, k: Int = 64, bands: Int = 16,
@@ -859,50 +860,36 @@ object Dedup {
     require(batchId.matches("[A-Za-z0-9_-]+") && batchId != "base",
       s"batchId must be a fresh [A-Za-z0-9_-]+ segment name, got '$batchId'")
     require(maxBucket >= -1L, s"maxBucket must be -1, 0 or positive, got $maxBucket")
-    val newMeta = newDocs
-      .select(col(idCol).as("id"), wordShingles(col(textCol), shingleN).as("sh"))
-      .persist()
-    val newBanded = newMeta
-      .select(col("id"),
-        graft.plans.MinHashBandsExpression.minhashBands(col("sh"), k, bands).as("bh"))
-      .select(col("id"), posexplode(col("bh")).as(Seq("band", "h")))
-      .persist()
-    // ONE small aggregate over the persisted band table feeds BOTH
-    // census disciplines: (a) the broadcast gate — a backfill-sized
-    // batch must degrade to a shuffle join instead of OOMing the driver
-    // with a corpus-sized broadcast, so the batch is COUNTED, never
-    // assumed micro; (b) the batch's one-row capstats segment
-    val st = newBanded.agg(count(lit(1)).as("s"),
-      count_distinct(struct(col("band"), col("h"))).as("k")).head()
-    val (bRows, bKeys) = (st.getLong(0), st.getLong(1))
-    val broadcastBatch = bRows <= broadcastMaxBatchRows
-    // store segments as of BEFORE this batch (its batch=<id> dirs are
-    // excluded even on re-ingest: the filter prunes them at plan time)
-    val oldMeta = spark.read.parquet(s"$path/meta")
-      .filter(col("batch") =!= batchId).drop("batch")
-    val oldBands = spark.read.parquet(s"$path/bands")
-      .filter(col("batch") =!= batchId).drop("batch")
-    // census-derived default cap from the STORE-WIDE statistics (the
-    // [[Census]] scaladoc's drift argument) — a store built before
-    // capstats existed falls back to the batch-restricted derive inside
-    // hotKeyPrune (-1 passes through), documented conservative-only once
-    // the store carries stats
-    val cap = if (maxBucket == -1L)
-        Census.readCapStats(spark, path, excludeBatch = batchId)
-          .map { case (s0, k0) => Census.derivedCap(s0 + bRows, k0 + bKeys) }
-          .getOrElse(-1L)
-      else maxBucket
-    val (pairs, dropped) = lshAppendPairs(oldBands, oldMeta, newBanded,
-      newMeta, threshold, cap, broadcastBatch)
-    // disk barrier: report first, then the dropped-bucket observability
-    // frame, then the store segments
-    pairs.write.mode("overwrite").parquet(s"$path/pairs/batch=$batchId")
-    if (dropped != null)
-      dropped.write.mode("overwrite").parquet(s"$path/dropped/batch=$batchId")
-    newMeta.write.mode("overwrite").parquet(s"$path/meta/batch=$batchId")
-    newBanded.write.mode("overwrite").parquet(s"$path/bands/batch=$batchId")
-    Census.writeCapStats(spark, path, batchId, bRows, bKeys)
-    newMeta.unpersist(); newBanded.unpersist()
+    val mat = new Census.Materialised
+    try {
+      val newMeta = mat.keep(newDocs
+        .select(col(idCol).as("id"), wordShingles(col(textCol), shingleN).as("sh")))
+      val newBanded = mat.keep(newMeta
+        .select(col("id"),
+          graft.plans.MinHashBandsExpression.minhashBands(col("sh"), k, bands).as("bh"))
+        .select(col("id"), posexplode(col("bh")).as(Seq("band", "h"))))
+      // ONE small aggregate over the band table (materialising both
+      // cached frames) feeds the broadcast gate — a backfill-sized batch
+      // is COUNTED, never assumed micro — and the batch's capstats
+      val (bRows, bKeys) = Census.postingStats(newBanded, Seq("band", "h"))
+      // store segments as of BEFORE this batch (its batch=<id> dirs are
+      // excluded even on re-ingest: the filter prunes them at plan time)
+      val oldMeta = spark.read.parquet(s"$path/meta")
+        .filter(col("batch") =!= batchId).drop("batch")
+      val oldBands = spark.read.parquet(s"$path/bands")
+        .filter(col("batch") =!= batchId).drop("batch")
+      val cap = Census.appendCap(spark, path, batchId, maxBucket, bRows, bKeys)
+      val (pairs, dropped) = lshAppendPairs(oldBands, oldMeta, newBanded,
+        newMeta, threshold, cap, mat, bRows <= broadcastMaxBatchRows)
+      // disk barrier: report first, then the dropped-bucket observability
+      // frame, then the store segments
+      pairs.write.mode("overwrite").parquet(s"$path/pairs/batch=$batchId")
+      if (dropped != null)
+        dropped.write.mode("overwrite").parquet(s"$path/dropped/batch=$batchId")
+      newMeta.write.mode("overwrite").parquet(s"$path/meta/batch=$batchId")
+      newBanded.write.mode("overwrite").parquet(s"$path/bands/batch=$batchId")
+      Census.writeCapStats(spark, path, batchId, bRows, bKeys)
+    } finally mat.release()
     // auto-compaction AFTER this batch's segments are durable: folds
     // strictly below the live batch (the st26 watermark contract)
     if (compactEvery > 0)
@@ -931,55 +918,48 @@ object Dedup {
       capstatsFrom = Some(("bands", Seq("band", "h"))),
       purgeDropped = purgeDropped)
 
-  /** The lazy pair plan of [[appendToLshIndex]] — split out so its shape
-    * is plan-testable (PlanSpec pins that the store side is never
-    * shuffled in ANY cap regime, and that the broadcast gate actually
-    * flips the join strategy). `oldBands`/`newBanded` are
-    * `(id, band, h)` tables; `oldMeta`/`newMeta` are `(id, sh)` shingle
-    * tables.
+  /** The pair plan of [[appendToLshIndex]] — split out so its shape is
+    * plan-testable (PlanSpec pins that the store side is never shuffled
+    * in ANY cap regime, that the broadcast gate actually flips the join
+    * strategy, and that the report scans each store table once).
+    * `oldBands`/`newBanded` are `(id, band, h)` tables; `oldMeta`/
+    * `newMeta` are `(id, sh)` shingle tables.
+    *
+    * Materialised into `mat` (the caller releases it after writing the
+    * report and the dropped census): the store rows in the batch's
+    * buckets and the kept buckets ([[Census.appendCensus]]), the
+    * candidate pairs, which the verify step refers to three times, and
+    * the candidates' shingle rows, which both fetch joins read. Each is
+    * batch-bounded; under AQE every reference to a lazy frame runs its
+    * plan again (measured on a 167-doc store: the lazy plan ran 195
+    * exchange stages, reused none and scanned the band store 45 times),
+    * so materialising them runs every stage, and scans each store table,
+    * once. The corpus-sized tables themselves are never materialised.
     *
     * Cap semantics under incrementality (the audio append's contract,
     * [[graft.multimodal.Multimodal.appendToAudioIndex]]): the census
     * runs over (old ∪ new) RESTRICTED to the batch's `(band, h)` keys —
     * only batch keys can form new pairs, so an explicit cap's verdict
     * matches a full-store census exactly while the per-trigger plan
-    * stays batch-keyed (the store rides a semi-join on the batch's
-    * keys and is never shuffled). Reports are append-time-consistent —
-    * a bucket that crosses the cap in a LATER batch keeps its earlier
-    * reports (no retraction), so exact one-shot equality holds uncapped
-    * or when no bucket crosses the cap mid-stream (the st21
-    * discipline; PipelineSpec pins capped append == capped one-shot on
-    * a corpus whose hot bucket is over-cap from the base store on).
+    * stays batch-keyed. Reports are append-time-consistent — a bucket
+    * that crosses the cap in a LATER batch keeps its earlier reports (no
+    * retraction), so exact one-shot equality holds uncapped or when no
+    * bucket crosses the cap mid-stream (the st21 discipline; PipelineSpec
+    * pins capped append == capped one-shot on a corpus whose hot bucket
+    * is over-cap from the base store on).
     *
     * Returns (verified pairs, dropped census `(band, h, n, cap)`);
     * dropped is null in the uncapped regime (no census is computed). */
   private[graft] def lshAppendPairs(oldBands: DataFrame, oldMeta: DataFrame,
       newBanded: DataFrame, newMeta: DataFrame, threshold: Double,
-      cap: Long, broadcastBatch: Boolean = true): (DataFrame, DataFrame) = {
+      cap: Long, mat: Census.Materialised,
+      broadcastBatch: Boolean = true): (DataFrame, DataFrame) = {
     // batch-derived frames are broadcast only below the caller's batch
     // census bound; above it the hint is withheld and AQE picks the
     // shuffle strategy (backfill-sized re-ingest degrades, never OOMs)
     def hint(df: DataFrame): DataFrame = if (broadcastBatch) broadcast(df) else df
-    val (okNew, okOld, dropped) =
-      if (cap == 0L)
-        // uncapped: the hash join on (band, h) against the batch side
-        // restricts the store scan without a separate semi-join pass
-        (newBanded, oldBands, null: DataFrame)
-      else {
-        // semi-join prune the store census side to the batch's buckets
-        // BEFORE counting: a bucket absent from the batch forms no new
-        // pair, so the census (and everything downstream) stays
-        // batch-keyed instead of store-sized — the audioAppendPairs
-        // pattern for the text modality
-        val batchKeys = hint(newBanded.select(col("band"), col("h")).distinct())
-        val oldRelevant = oldBands.join(batchKeys, Seq("band", "h"), "left_semi")
-        val census = oldRelevant.unionByName(newBanded)
-          .groupBy(col("band"), col("h")).agg(count(lit(1)).as("n"))
-        val (ok, drop) = Census.hotKeyPrune(census, Seq("band", "h"), cap)
-        // ok is bounded by the batch's distinct buckets -> same gate
-        (newBanded.join(hint(ok), Seq("band", "h")),
-          oldRelevant.join(hint(ok), Seq("band", "h")), drop)
-      }
+    val (okNew, okOld, dropped) = Census.appendCensus(oldBands, newBanded,
+      Seq("band", "h"), cap, broadcastBatch, mat)
     // candidates with >=1 new side; store side scanned once, unshuffled
     val newVsOld = okOld.join(
         hint(okNew.withColumnRenamed("id", "nid")), Seq("band", "h"))
@@ -991,18 +971,17 @@ object Dedup {
         col("l.band") === col("r.band") && col("l.h") === col("r.h") &&
           col("l.id") < col("r.id"))
       .select(col("l.id").as("a"), col("r.id").as("b"))
-    val cand = newVsOld.unionByName(newVsNew).distinct()
+    val cand = mat(newVsOld.unionByName(newVsNew).distinct())
     // verify with exact jaccard over the combined shingle store. The
     // candidate frames are batch-bounded, so they ride the same
-    // broadcast gate: the semi-join prune and the first fetch join keep
-    // the corpus-sized shingle table SCANNED-NOT-SHUFFLED per trigger
-    // (the one-shot path accepts that shuffle because its candidate set
-    // is corpus-sized; an append's is not) — only candidate-sized
-    // frames ever reach an exchange here, and PlanSpec pins it
+    // broadcast gate: the semi-join prune keeps the corpus-sized shingle
+    // table SCANNED-NOT-SHUFFLED, once per trigger (the one-shot path
+    // accepts that shuffle because its candidate set is corpus-sized; an
+    // append's is not); both fetch joins read the materialised rows
     val allMeta = oldMeta.unionByName(newMeta)
     val candIds = hint(cand.select(col("a").as("id"))
       .union(cand.select(col("b").as("id"))))
-    val needed = allMeta.join(candIds, Seq("id"), "left_semi")
+    val needed = mat(allMeta.join(candIds, Seq("id"), "left_semi"))
     val sa = needed.select(col("id").as("a"), col("sh").as("sha"))
     val sb = needed.select(col("id").as("b"), col("sh").as("shb"))
     val pairs = hint(cand).join(sa, "a").join(sb, "b")

@@ -78,16 +78,17 @@ object HammingIndex {
     val spark = sigs.sparkSession
     banded(sigs.select(col("id"), col("sig")), bands)
       .write.mode("overwrite").parquet(s"$path/bands/batch=base")
-    val st = spark.read.parquet(s"$path/bands/batch=base")
-      .agg(count(lit(1)).as("s"),
-        count_distinct(struct(col("band"), col("h"))).as("k")).head()
-    Census.writeCapStats(spark, path, "base", st.getLong(0), st.getLong(1))
+    val (rows, keys) = Census.postingStats(
+      spark.read.parquet(s"$path/bands/batch=base"), Seq("band", "h"))
+    Census.writeCapStats(spark, path, "base", rows, keys)
   }
 
   /** Append a `(id, sig)` batch and return the verified near-dup pairs
     * `(a, b, hamming)` INVOLVING the new docs (new↔old and new↔new).
-    * Same durability/ordering and idempotent-re-ingest contract as
-    * [[Dedup.appendToLshIndex]]; `maxBucket` -1 derives the cap from
+    * Same durability/ordering, materialisation and idempotent-re-ingest
+    * contract as [[Dedup.appendToLshIndex]]: the batch's postings and
+    * the census frames of [[hammingAppendPairs]] are cached once and
+    * released in a `finally`; `maxBucket` -1 derives the cap from
     * store-wide capstats, 0 disables it. */
   def appendToHammingIndex(spark: SparkSession, path: String,
       newSigs: DataFrame, batchId: String, maxHamming: Int = 3,
@@ -98,31 +99,25 @@ object HammingIndex {
       s"batchId must be a fresh [A-Za-z0-9_-]+ segment name, got '$batchId'")
     require(maxBucket >= -1L,
       s"maxBucket must be -1, 0 or positive, got $maxBucket")
-    val newBanded = banded(newSigs.select(col("id"), col("sig")), bands)
-      .persist()
-    // one small aggregate feeds BOTH census disciplines: the broadcast
-    // gate (a backfill-sized batch is counted, never assumed micro) and
-    // the batch's one-row capstats segment
-    val st = newBanded.agg(count(lit(1)).as("s"),
-      count_distinct(struct(col("band"), col("h"))).as("k")).head()
-    val (bRows, bKeys) = (st.getLong(0), st.getLong(1))
-    val broadcastBatch = bRows <= broadcastMaxBatchRows
-    val oldBands = spark.read.parquet(s"$path/bands")
-      .filter(col("batch") =!= batchId).drop("batch")
-    val cap = if (maxBucket == -1L)
-        Census.readCapStats(spark, path, excludeBatch = batchId)
-          .map { case (s0, k0) => Census.derivedCap(s0 + bRows, k0 + bKeys) }
-          .getOrElse(-1L)
-      else maxBucket
-    val (pairs, dropped) =
-      hammingAppendPairs(oldBands, newBanded, maxHamming, cap, broadcastBatch)
-    // disk barrier: report first, then observability, then the postings
-    pairs.write.mode("overwrite").parquet(s"$path/pairs/batch=$batchId")
-    if (dropped != null)
-      dropped.write.mode("overwrite").parquet(s"$path/dropped/batch=$batchId")
-    newBanded.write.mode("overwrite").parquet(s"$path/bands/batch=$batchId")
-    Census.writeCapStats(spark, path, batchId, bRows, bKeys)
-    newBanded.unpersist()
+    val mat = new Census.Materialised
+    try {
+      val newBanded = mat.keep(banded(newSigs.select(col("id"), col("sig")), bands))
+      // one small aggregate feeds BOTH census disciplines: the broadcast
+      // gate (a backfill-sized batch is counted, never assumed micro) and
+      // the batch's one-row capstats segment
+      val (bRows, bKeys) = Census.postingStats(newBanded, Seq("band", "h"))
+      val oldBands = spark.read.parquet(s"$path/bands")
+        .filter(col("batch") =!= batchId).drop("batch")
+      val cap = Census.appendCap(spark, path, batchId, maxBucket, bRows, bKeys)
+      val (pairs, dropped) = hammingAppendPairs(oldBands, newBanded,
+        maxHamming, cap, mat, bRows <= broadcastMaxBatchRows)
+      // disk barrier: report first, then observability, then the postings
+      pairs.write.mode("overwrite").parquet(s"$path/pairs/batch=$batchId")
+      if (dropped != null)
+        dropped.write.mode("overwrite").parquet(s"$path/dropped/batch=$batchId")
+      newBanded.write.mode("overwrite").parquet(s"$path/bands/batch=$batchId")
+      Census.writeCapStats(spark, path, batchId, bRows, bKeys)
+    } finally mat.release()
     if (compactEvery > 0)
       graft.operators.SegmentStore.autoCompact(spark, path, "bands",
         batchId, compactEvery)
@@ -141,35 +136,31 @@ object HammingIndex {
       capstatsFrom = Some(("bands", Seq("band", "h"))),
       purgeDropped = purgeDropped)
 
-  /** The lazy pair plan of [[appendToHammingIndex]], split out so its
-    * shape is plan-testable (PlanSpec pins that the store side is never
-    * shuffled in any cap regime and that the broadcast gate flips the
-    * join strategy — the round-15 walker that caught the shingle-fetch
-    * shuffle pre-ship). The census runs over (old ∪ new) RESTRICTED to
-    * the batch's `(band, h)` keys — only batch keys can form new pairs
-    * — so the per-trigger plan stays batch-keyed and the store rides a
-    * semi-join, never an exchange.
+  /** The pair plan of [[appendToHammingIndex]], split out so its shape
+    * is plan-testable (PlanSpec pins that the store side is never
+    * shuffled in any cap regime, that the broadcast gate flips the join
+    * strategy, and that the report scans the store once). The census
+    * runs over (old ∪ new) RESTRICTED to the batch's `(band, h)` keys —
+    * only batch keys can form new pairs — so the per-trigger plan stays
+    * batch-keyed and the store rides a semi-join, never an exchange.
+    *
+    * Materialised into `mat` by [[Census.appendCensus]]: the store
+    * postings in the batch's buckets and the kept buckets, both
+    * batch-bounded and each referred to several times below, which AQE
+    * would otherwise run once per reference. The pairs need no
+    * materialising: verification is inline and the report reads them
+    * once.
     *
     * Returns (verified pairs `(a, b, hamming)`, dropped census
     * `(band, h, n, cap)`); dropped is null in the uncapped regime. */
   private[graft] def hammingAppendPairs(oldBands: DataFrame,
       newBanded: DataFrame, maxHamming: Int, cap: Long,
+      mat: Census.Materialised,
       broadcastBatch: Boolean = true): (DataFrame, DataFrame) = {
     def hint(df: DataFrame): DataFrame =
       if (broadcastBatch) broadcast(df) else df
-    val (okNew, okOld, dropped) =
-      if (cap == 0L) (newBanded, oldBands, null: DataFrame)
-      else {
-        val batchKeys = hint(newBanded.select(col("band"), col("h")).distinct())
-        val oldRelevant =
-          oldBands.join(batchKeys, Seq("band", "h"), "left_semi")
-        val census = oldRelevant.select(col("band"), col("h"))
-          .unionByName(newBanded.select(col("band"), col("h")))
-          .groupBy(col("band"), col("h")).agg(count(lit(1)).as("n"))
-        val (ok, drop) = Census.hotKeyPrune(census, Seq("band", "h"), cap)
-        (newBanded.join(hint(ok), Seq("band", "h")),
-          oldRelevant.join(hint(ok), Seq("band", "h")), drop)
-      }
+    val (okNew, okOld, dropped) = Census.appendCensus(oldBands, newBanded,
+      Seq("band", "h"), cap, broadcastBatch, mat)
     // verification is inline — the signature rides the posting row, so
     // candidates never need a fetch join back to a meta table
     val newSide = hint(okNew

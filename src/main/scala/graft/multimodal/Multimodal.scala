@@ -1,5 +1,7 @@
 package graft.multimodal
 
+import graft.dedup.Census
+import graft.dedup.Census.hotKeyPrune
 import graft.functions.Hashing
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
@@ -673,32 +675,6 @@ object Multimodal {
     (clusterCensus(asg), dropped)
   }
 
-  /** Hot-key census prune shared by the modality pair generators
-    * ([[videoDupPairs]], [[imageDupClusters]], [[audioDupPairs]]) — one
-    * cap POLICY instead of three ad-hoc defaults:
-    *
-    *  - `cap > 0` — explicit cap, the caller knows the corpus;
-    *  - `cap == 0` — off (completeness over the n² risk, the
-    *    [[graft.dedup.Dedup.simhashPairs]] caveat);
-    *  - `cap < 0` (DEFAULT) — census-derived: `max(256, 32 × ⌈mean
-    *    bucket size⌉)`, p23's skew statistic turned into a default-on
-    *    cap. Honest buckets sit near the census mean; a degenerate key
-    *    (silence windows, black frames, flat thumbnails) sits orders
-    *    above and squares at corpus scale. Computed plan-side as a
-    *    1-row broadcast over the census aggregate — exact integer
-    *    arithmetic, no extra driver job, and SQL-replayable when a gate
-    *    needs to pin it. The 256 floor keeps the auto cap from ever
-    *    binding on gate-scale corpora (every bucket ≤ 256 passes), so
-    *    correctness oracles stay cap-free unless they opt in.
-    *
-    * Singleton buckets (n = 1) generate no pairs and are pruned in every
-    * regime. Returns (kept keys, dropped census `(key…, n, cap)`) — the
-    * dropped frame is the observability contract: empty ⇒ no loss;
-    * non-empty ⇒ each row names a degenerate key to handle upstream. */
-  private def hotKeyPrune(census: DataFrame, keyCols: Seq[String],
-      cap: Long): (DataFrame, DataFrame) =
-    graft.dedup.Census.hotKeyPrune(census, keyCols, cap)
-
   /** 64-bit energy-band fingerprint of one PCM window — the audio
     * perceptual hash of the modality×dedup matrix (text SimHash, image
     * dHash, video frame-dHash, THIS): 8 equal time bands, per band the
@@ -923,10 +899,9 @@ object Multimodal {
     // seed the STORE-WIDE cap statistics ([[graft.dedup.Census]]): exact
     // at build time, appends accumulate their own one-row segments
     val spark = media.sparkSession
-    val st = spark.read.parquet(s"$path/fps/batch=base")
-      .agg(count(lit(1)).as("s"), count_distinct(col("fp")).as("k")).head()
-    graft.dedup.Census.writeCapStats(spark, path, "base",
-      st.getLong(0), st.getLong(1))
+    val (rows, keys) = Census.postingStats(
+      spark.read.parquet(s"$path/fps/batch=base"), Seq("fp"))
+    Census.writeCapStats(spark, path, "base", rows, keys)
   }
 
   /** Append a clip batch to a [[buildAudioIndex]] store and return the
@@ -972,40 +947,30 @@ object Multimodal {
     require(batchId.matches("[A-Za-z0-9_-]+") && batchId != "base",
       s"batchId must be a fresh [A-Za-z0-9_-]+ segment name, got '$batchId'")
     require(minShared >= 1, s"minShared=$minShared")
-    val newFps = audioFingerprints(newMedia, windowLen, hop).distinct()
-      .withColumnRenamed("media_id", "id")
-      .persist()
-    // ONE small aggregate over the persisted batch feeds BOTH census
-    // disciplines: (a) the broadcast gate — a backfill-sized batch
-    // degrades to an AQE-picked shuffle join instead of OOMing the
-    // driver with an unconditional broadcast; (b) the batch's one-row
-    // capstats segment
-    val st = newFps.agg(count(lit(1)).as("s"),
-      count_distinct(col("fp")).as("k")).head()
-    val (bRows, bKeys) = (st.getLong(0), st.getLong(1))
-    val oldFps = spark.read.parquet(s"$path/fps")
-      .filter(col("batch") =!= batchId).drop("batch")
-    // census-derived default cap from the STORE-WIDE statistics (the
-    // [[graft.dedup.Census]] drift argument: a batch concentrated on one
-    // degenerate fingerprint must not be able to RAISE the cap); a store
-    // built before capstats existed falls back to the batch-restricted
-    // derive inside hotKeyPrune
-    val cap = if (maxClipsPerFingerprint == -1L)
-        graft.dedup.Census.readCapStats(spark, path, excludeBatch = batchId)
-          .map { case (s0, k0) =>
-            graft.dedup.Census.derivedCap(s0 + bRows, k0 + bKeys) }
-          .getOrElse(-1L)
-      else maxClipsPerFingerprint
-    val (pairs, dropped) = audioAppendPairsTracked(oldFps, newFps, minShared,
-      cap, broadcastBatch = bRows <= broadcastMaxBatchRows)
-    // disk barrier: report first, then the dropped-fingerprint
-    // observability frame, then the store segment
-    pairs.write.mode("overwrite").parquet(s"$path/pairs/batch=$batchId")
-    if (dropped != null)
-      dropped.write.mode("overwrite").parquet(s"$path/dropped/batch=$batchId")
-    newFps.write.mode("overwrite").parquet(s"$path/fps/batch=$batchId")
-    graft.dedup.Census.writeCapStats(spark, path, batchId, bRows, bKeys)
-    newFps.unpersist()
+    val mat = new Census.Materialised
+    try {
+      val newFps = mat.keep(audioFingerprints(newMedia, windowLen, hop)
+        .distinct().withColumnRenamed("media_id", "id"))
+      // ONE small aggregate over the cached batch feeds BOTH census
+      // disciplines: (a) the broadcast gate — a backfill-sized batch
+      // degrades to an AQE-picked shuffle join instead of OOMing the
+      // driver with an unconditional broadcast; (b) the batch's one-row
+      // capstats segment
+      val (bRows, bKeys) = Census.postingStats(newFps, Seq("fp"))
+      val oldFps = spark.read.parquet(s"$path/fps")
+        .filter(col("batch") =!= batchId).drop("batch")
+      val cap = Census.appendCap(spark, path, batchId,
+        maxClipsPerFingerprint, bRows, bKeys)
+      val (pairs, dropped) = audioAppendPairsTracked(oldFps, newFps,
+        minShared, cap, mat, broadcastBatch = bRows <= broadcastMaxBatchRows)
+      // disk barrier: report first, then the dropped-fingerprint
+      // observability frame, then the store segment
+      pairs.write.mode("overwrite").parquet(s"$path/pairs/batch=$batchId")
+      if (dropped != null)
+        dropped.write.mode("overwrite").parquet(s"$path/dropped/batch=$batchId")
+      newFps.write.mode("overwrite").parquet(s"$path/fps/batch=$batchId")
+      Census.writeCapStats(spark, path, batchId, bRows, bKeys)
+    } finally mat.release()
     // auto-compaction AFTER this batch's segments are durable: folds
     // strictly below the live batch (the st26 watermark contract)
     if (compactEvery > 0)
@@ -1027,45 +992,29 @@ object Multimodal {
       capstatsFrom = Some(("fps", Seq("fp"))),
       purgeDropped = purgeDropped)
 
-  /** The lazy pair plan of [[appendToAudioIndex]] — split out so its
-    * shape is plan-testable (PlanSpec pins that the store side is never
-    * shuffled, in BOTH cap regimes). `oldFps`/`newFps` are (id, fp)
-    * tables; the batch side is always broadcast. */
-  private[graft] def audioAppendPairs(oldFps: DataFrame, newFps: DataFrame,
-      minShared: Int, maxClipsPerFingerprint: Long): DataFrame =
-    audioAppendPairsTracked(oldFps, newFps, minShared,
-      maxClipsPerFingerprint, broadcastBatch = true)._1
-
-  /** [[audioAppendPairs]] plus the dropped-fingerprint census (null in
-    * the uncapped regime — no census is computed) and the batch
-    * broadcast gate: batch-derived frames are broadcast only when the
-    * caller's batch census said so; above the bound the hint is
+  /** The pair plan of [[appendToAudioIndex]] — split out so its shape
+    * is plan-testable (PlanSpec pins that the store side is never
+    * shuffled, in BOTH cap regimes, and that the report scans it once).
+    * `oldFps`/`newFps` are (id, fp) tables. Returns the pairs and the
+    * dropped-fingerprint census (null in the uncapped regime — no
+    * census is computed).
+    *
+    * [[Census.appendCensus]] materialises into `mat` the
+    * store fingerprints in the batch's keys and the kept keys — both
+    * batch-bounded, each referred to several times below, which AQE
+    * would otherwise run once per reference; the caller releases `mat`
+    * after writing the report. Batch-derived frames are broadcast only
+    * when the caller's batch census said so; above the bound the hint is
     * withheld and AQE picks the shuffle strategy (backfill-sized
     * re-ingest degrades, never OOMs the driver). */
   private[graft] def audioAppendPairsTracked(oldFps: DataFrame,
       newFps: DataFrame, minShared: Int, maxClipsPerFingerprint: Long,
-      broadcastBatch: Boolean): (DataFrame, DataFrame) = {
+      mat: Census.Materialised,
+      broadcastBatch: Boolean = true): (DataFrame, DataFrame) = {
     def hint(df: DataFrame): DataFrame =
       if (broadcastBatch) broadcast(df) else df
-    val (okNew, okOld, dropped) = if (maxClipsPerFingerprint == 0L)
-        (newFps, oldFps, null: DataFrame)
-      else {
-        // semi-join prune BOTH census sides to the batch's fingerprints
-        // before the count: a fingerprint absent from the batch forms no
-        // new pair, so an explicit cap's verdict on it is irrelevant —
-        // pruning first makes the census (and everything downstream)
-        // batch-keyed instead of store-sized, and the store side rides a
-        // broadcast semi-join instead of a per-trigger shuffle
-        val batchFps = hint(newFps.select(col("fp")).distinct())
-        val oldRelevant = oldFps.join(batchFps, Seq("fp"), "left_semi")
-        val census = oldRelevant.unionByName(newFps)
-          .groupBy(col("fp")).agg(count(lit(1)).as("n"))
-        val (ok, drop) =
-          hotKeyPrune(census, Seq("fp"), maxClipsPerFingerprint)
-        // ok is bounded by the batch's distinct fingerprints → same gate
-        (newFps.join(hint(ok), Seq("fp")),
-          oldRelevant.join(hint(ok), Seq("fp")), drop)
-      }
+    val (okNew, okOld, dropped) = Census.appendCensus(oldFps,
+      newFps, Seq("fp"), maxClipsPerFingerprint, broadcastBatch, mat)
     val newVsOld = okOld.join(
         hint(okNew.withColumnRenamed("id", "nid")), Seq("fp"))
       .filter(col("id") =!= col("nid"))

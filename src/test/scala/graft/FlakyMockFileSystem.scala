@@ -3,15 +3,40 @@ package graft
 import java.io.{FileInputStream, IOException, InputStream}
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.hadoop.fs.{FSDataInputStream, Path}
+import org.apache.hadoop.fs.{FSDataInputStream, FSDataOutputStream, Path}
+import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.hadoop.util.Progressable
 
 /** [[graft.sources.S3MockFileSystem]] variant (`s3f://`) whose reads fail
   * transiently every [[FlakyMockFileSystem.failEvery]]th read call — the
   * test double for flaky object-store GETs. Every `open` wraps the flaky
   * byte source in [[graft.sources.RetryingInputStream]], so a read that
   * hits an injected failure resumes at the failed offset exactly like the
-  * reference's retry-wrapped S3 partitions. */
+  * reference's retry-wrapped S3 partitions. Writes fail (permanently)
+  * while [[FlakyMockFileSystem.failCreateUnder]] names a fragment of the
+  * created file's path — the test double for a failed object PUT. */
 class FlakyMockFileSystem extends graft.sources.S3MockFileSystem {
+  private def failCreate(f: Path): Unit = {
+    val under = FlakyMockFileSystem.failCreateUnder
+    if (under != null && f.toUri.getPath.contains(under)) {
+      FlakyMockFileSystem.injectedFailures.incrementAndGet()
+      throw new IOException(s"injected write failure creating $f")
+    }
+  }
+  override def create(f: Path, overwrite: Boolean, bufferSize: Int,
+      replication: Short, blockSize: Long,
+      progress: Progressable): FSDataOutputStream = {
+    failCreate(f)
+    super.create(f, overwrite, bufferSize, replication, blockSize, progress)
+  }
+  override def create(f: Path, permission: FsPermission, overwrite: Boolean,
+      bufferSize: Int, replication: Short, blockSize: Long,
+      progress: Progressable): FSDataOutputStream = {
+    failCreate(f)
+    super.create(f, permission, overwrite, bufferSize, replication,
+      blockSize, progress)
+  }
+
   override def open(f: Path, bufferSize: Int): FSDataInputStream = {
     val file = pathToFile(f)
     new FSDataInputStream(new graft.sources.RetryingInputStream(offset => {
@@ -31,6 +56,8 @@ object FlakyMockFileSystem {
     * a test flake. Per-stream stride-1 counting makes the retry (that
     * stream's next read) deterministically succeed. */
   @volatile var failEvery: Long = 0L
+  /** path fragment whose files fail to be created; null disables it */
+  @volatile var failCreateUnder: String = null
   val reads = new AtomicLong(0)
   val injectedFailures = new AtomicLong(0)
 

@@ -149,8 +149,10 @@ class PipelineSpec extends AnyFunSuite with CacheHygiene {
     val newFps = Seq((9000L, 111L), (9001L, 222L), (9002L, 222L),
       (9003L, 7777L)).toDF("id", "fp")
     val cap = 6L
-    val got = Multimodal.audioAppendPairs(oldFps, newFps, 1, cap)
-      .as[(Long, Long, Long)].collect().toSet
+    val mat = new graft.dedup.Census.Materialised
+    val got = try Multimodal.audioAppendPairsTracked(oldFps, newFps, 1, cap,
+        mat)._1.as[(Long, Long, Long)].collect().toSet
+      finally mat.release()
     // the round-13 form: census over the FULL old∪new store (explicit
     // cap ⇒ provably the same verdict per batch fp, since non-batch fps
     // generate no pairs either way)

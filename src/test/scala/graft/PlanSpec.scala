@@ -847,50 +847,125 @@ class PlanSpec extends AnyFunSuite with CacheHygiene {
     assert(out.count() > 0)
   }
 
-  test("capped audio-index append: the store is never shuffled (batch-fp prune)") {
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.execution.FileSourceScanExec
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, ShuffledHashJoinExec, SortMergeJoinExec}
-    val spark2 = spark; import spark2.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("audidx").toString
-    spark.range(0L, 2000L)
-      .select(col("id"), (col("id") % 50).as("fp"))
-      .write.parquet(s"$dir/fps/batch=base")
-    val oldFps = spark.read.parquet(s"$dir/fps").drop("batch")
-    val newFps = Seq((9001L, 3L), (9002L, 3L), (9003L, 7L)).toDF("id", "fp")
+  // ---- segment-store appends ------------------------------------------
+  // Each append materialises its batch-bounded frames (store rows in the
+  // batch's keys, kept keys, LSH candidates and their shingle rows) into
+  // a Census.Materialised, so the store scans live in those frames'
+  // cached plans: the pins below walk them too, or a pin on the returned
+  // frame alone would pass vacuously.
+
+  import org.apache.spark.sql.DataFrame
+  import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+  import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, ExchangeQueryStageExec, QueryStageExec}
+  import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+  import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
+  import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, ShuffledHashJoinExec, SortMergeJoinExec}
+  import graft.dedup.Census.Materialised
+
+  /** `p` plus, recursively, the plans of the cached frames it scans. */
+  private def withCachedPlans(p: SparkPlan): Seq[SparkPlan] =
+    p +: p.collect { case s: InMemoryTableScanExec => s.relation.cachedPlan }
+      .flatMap(withCachedPlans)
+
+  /** The executed plans of a pair frame and of every frame the append
+    * materialised, cached plans included. */
+  private def appendPlans(pairs: DataFrame, mat: Materialised): Seq[SparkPlan] =
+    (pairs +: mat.frames).flatMap(f => withCachedPlans(f.queryExecution.executedPlan))
+
+  /** Run `build` with AQE off (a plain tree for the structural walk) and
+    * assert that the store may only reach a shuffle AFTER a batch
+    * broadcast join pruned it: any Exchange whose subtree scans the store
+    * parquet without an intervening broadcast join is the
+    * O(store)-per-trigger regression. The walk must see the store scan;
+    * `noShuffledJoin` also bans sort-merge and shuffled-hash joins. */
+  private def assertStoreNeverShuffled(noShuffledJoin: Boolean)(
+      build: (Long, Materialised) => DataFrame): Unit = {
     val key = "spark.sql.adaptive.enabled"
     val prev = spark.conf.get(key)
     try {
-      spark.conf.set(key, "false") // plain tree for the structural walk
+      spark.conf.set(key, "false")
       for (cap <- Seq(-1L, 10L, 0L)) {
-        val plan = graft.multimodal.Multimodal
-          .audioAppendPairs(oldFps, newFps, 1, cap)
-          .queryExecution.executedPlan
-        // the store may only reach a shuffle AFTER the batch broadcast
-        // join pruned it: any Exchange whose subtree scans the store
-        // parquet without an intervening broadcast join is the exact
-        // O(store)-per-trigger regression this pins against
-        val bad = plan.collect {
-          case e: ShuffleExchangeExec
-              if e.collect { case s: FileSourceScanExec => s }.nonEmpty &&
-                e.collect { case j: BroadcastHashJoinExec => j }.isEmpty => e
-        }
-        assert(bad.isEmpty,
-          s"cap=$cap shuffles the unpruned store:\n${bad.headOption.getOrElse(plan)}")
-        assert(plan.collect { case j: SortMergeJoinExec => j }.isEmpty &&
-          plan.collect { case j: ShuffledHashJoinExec => j }.isEmpty,
-          s"cap=$cap join-shuffles the store:\n$plan")
+        val mat = new Materialised
+        try {
+          val plans = appendPlans(build(cap, mat), mat)
+          assert(plans.exists(_.collect { case sc: FileSourceScanExec => sc }.nonEmpty),
+            s"cap=$cap: no plan scans the store — the walk proved nothing")
+          val bad = plans.flatMap(_.collect {
+            case e: ShuffleExchangeExec
+                if e.collect { case sc: FileSourceScanExec => sc }.nonEmpty &&
+                  e.collect { case j: BroadcastHashJoinExec => j }.isEmpty => e
+          })
+          assert(bad.isEmpty,
+            s"cap=$cap shuffles the unpruned store:\n${bad.headOption.getOrElse(plans.head)}")
+          if (noShuffledJoin)
+            assert(plans.forall(p => p.collect { case j: SortMergeJoinExec => j }.isEmpty &&
+                p.collect { case j: ShuffledHashJoinExec => j }.isEmpty),
+              s"cap=$cap join-shuffles the store:\n${plans.mkString("\n")}")
+        } finally mat.release()
       }
     } finally spark.conf.set(key, prev)
   }
 
-  test("capped LSH-index append: the store is never shuffled (batch-bucket prune)") {
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.execution.FileSourceScanExec
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+  /** Every plan one run of `p` executes, once each and disjoint: its AQE
+    * query stages, its subqueries, and the plans of the cached frames it
+    * reads (each cached frame ran once, when it was materialised). */
+  private def executedParts(p: SparkPlan,
+      seen: scala.collection.mutable.Set[AnyRef]): Seq[SparkPlan] =
+    p +: p.collectWithSubqueries {
+      case s: QueryStageExec => executedParts(s.plan, seen)
+      case a: AdaptiveSparkPlanExec => executedParts(a.executedPlan, seen)
+      case c: InMemoryTableScanExec if seen.add(c.relation.cacheBuilder) =>
+        executedParts(c.relation.cachedPlan, seen)
+    }.flatten
+
+  /** With AQE on, run the pair frame of `build` under an explicit cap
+    * above every fixture bucket (the census runs, nothing is dropped, so
+    * AQE cannot prune empty branches) and return the work it repeated:
+    * exchange stages with the same canonical plan (neither a reuse), and
+    * store tables scanned more than once across the report and the
+    * frames it materialised. AQE's stage cache reuses identical
+    * exchanges, so the first list is empty by construction; the lazy
+    * pair plans repeated their work in stages that differ above the
+    * scan, which the second list catches. */
+  private def repeatedWork(build: (Long, Materialised) => DataFrame): Seq[String] = {
+    val key = "spark.sql.adaptive.enabled"
+    val prev = spark.conf.get(key)
+    val mat = new Materialised
+    try {
+      spark.conf.set(key, "true")
+      val pairs = build(100L, mat)
+      assert(pairs.collect().nonEmpty, "the fixture yields no pairs")
+      val seen = scala.collection.mutable.Set.empty[AnyRef]
+      val parts = (pairs +: mat.frames)
+        .flatMap(f => executedParts(f.queryExecution.executedPlan, seen))
+      val exchanges = parts.flatMap(_.collect { case e: ExchangeQueryStageExec => e })
+        .filterNot(_.plan.isInstanceOf[ReusedExchangeExec])
+        .groupBy(_.plan.canonicalized).values.filter(_.size > 1)
+        .map(ss => s"${ss.size} × ${ss.head.plan.nodeName}:\n${ss.head.plan}")
+      val scans = parts.flatMap(_.collect {
+          case sc: FileSourceScanExec => sc.relation.location.rootPaths.mkString(",")
+        }).groupBy(identity).view.mapValues(_.size).toMap
+      assert(scans.nonEmpty, "no plan scans the store — the walk proved nothing")
+      exchanges.toSeq ++ scans.collect {
+        case (store, n) if n > 1 => s"store table $store scanned $n times"
+      }
+    } finally { mat.release(); spark.conf.set(key, prev) }
+  }
+
+  private def audioStore(): (DataFrame, DataFrame) = {
     val spark2 = spark; import spark2.implicits._
+    import org.apache.spark.sql.functions._
+    val dir = java.nio.file.Files.createTempDirectory("audidx").toString
+    spark.range(0L, 2000L)
+      .select(col("id"), (col("id") % 50).as("fp"))
+      .write.parquet(s"$dir/fps/batch=base")
+    (spark.read.parquet(s"$dir/fps").drop("batch"),
+      Seq((9001L, 3L), (9002L, 3L), (9003L, 7L)).toDF("id", "fp"))
+  }
+
+  private def lshStore(): (DataFrame, DataFrame, DataFrame, DataFrame) = {
+    val spark2 = spark; import spark2.implicits._
+    import org.apache.spark.sql.functions._
     val dir = java.nio.file.Files.createTempDirectory("lshidx").toString
     spark.range(0L, 2000L)
       .select(col("id"), (col("id") % 16).cast("int").as("band"),
@@ -900,91 +975,93 @@ class PlanSpec extends AnyFunSuite with CacheHygiene {
       .select(col("id"), array(concat(lit("w"), col("id")),
         concat(lit("x"), col("id"))).as("sh"))
       .write.parquet(s"$dir/meta/batch=base")
-    val oldBands = spark.read.parquet(s"$dir/bands").drop("batch")
-    val oldMeta = spark.read.parquet(s"$dir/meta").drop("batch")
-    val newBanded = Seq((9001L, 3, 3L), (9002L, 3, 3L), (9003L, 7, 7L))
-      .toDF("id", "band", "h")
-    val newMeta = Seq((9001L, Seq("w3", "x3")), (9002L, Seq("w3", "x3")),
-      (9003L, Seq("w7"))).toDF("id", "sh")
-    val key = "spark.sql.adaptive.enabled"
-    val prev = spark.conf.get(key)
-    try {
-      spark.conf.set(key, "false") // plain tree for the structural walk
-      for (cap <- Seq(-1L, 10L, 0L)) {
-        val (pairs, _) = graft.dedup.Dedup.lshAppendPairs(
-          oldBands, oldMeta, newBanded, newMeta, 0.5, cap)
-        val plan = pairs.queryExecution.executedPlan
-        // the store may only reach a shuffle AFTER a batch broadcast
-        // join pruned it: any Exchange whose subtree scans the store
-        // parquet without an intervening broadcast join is the exact
-        // O(store)-per-trigger regression this pins against (the round-14
-        // verdict's What's-wrong #1)
-        val bad = plan.collect {
-          case e: ShuffleExchangeExec
-              if e.collect { case sc: FileSourceScanExec => sc }.nonEmpty &&
-                e.collect { case j: BroadcastHashJoinExec => j }.isEmpty => e
-        }
-        assert(bad.isEmpty,
-          s"cap=$cap shuffles the unpruned store:\n${bad.headOption.getOrElse(plan)}")
-      }
-    } finally spark.conf.set(key, prev)
+    (spark.read.parquet(s"$dir/bands").drop("batch"),
+      spark.read.parquet(s"$dir/meta").drop("batch"),
+      Seq((9001L, 3, 3L), (9002L, 3, 3L), (9003L, 7, 7L)).toDF("id", "band", "h"),
+      Seq((9001L, Seq("w3", "x3")), (9002L, Seq("w3", "x3")),
+        (9003L, Seq("w7"))).toDF("id", "sh"))
   }
 
-  test("capped Hamming-index append: the store is never shuffled (batch-bucket prune)") {
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.execution.FileSourceScanExec
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+  private def hammingStore(): (DataFrame, DataFrame) = {
     val spark2 = spark; import spark2.implicits._
+    import org.apache.spark.sql.functions._
     val dir = java.nio.file.Files.createTempDirectory("hamidx").toString
     spark.range(0L, 2000L)
       .select(col("id"), (col("id") * 7L).as("sig"),
         (col("id") % 4).cast("int").as("band"), (col("id") % 50).as("h"))
       .write.parquet(s"$dir/bands/batch=base")
-    val oldBands = spark.read.parquet(s"$dir/bands").drop("batch")
-    val newBanded = Seq((9001L, 21L, 3, 3L), (9002L, 23L, 3, 3L),
-      (9003L, 49L, 1, 7L)).toDF("id", "sig", "band", "h")
-    val key = "spark.sql.adaptive.enabled"
-    val prev = spark.conf.get(key)
-    try {
-      spark.conf.set(key, "false") // plain tree for the structural walk
-      for (cap <- Seq(-1L, 10L, 0L)) {
-        val (pairs, _) = graft.dedup.HammingIndex.hammingAppendPairs(
-          oldBands, newBanded, maxHamming = 3, cap)
-        val plan = pairs.queryExecution.executedPlan
-        // same pin as the LSH append: any Exchange whose subtree scans
-        // the store parquet without an intervening broadcast join is
-        // the O(store)-per-trigger regression
-        val bad = plan.collect {
-          case e: ShuffleExchangeExec
-              if e.collect { case sc: FileSourceScanExec => sc }.nonEmpty &&
-                e.collect { case j: BroadcastHashJoinExec => j }.isEmpty => e
-        }
-        assert(bad.isEmpty,
-          s"cap=$cap shuffles the unpruned store:\n${bad.headOption.getOrElse(plan)}")
-      }
-    } finally spark.conf.set(key, prev)
+    (spark.read.parquet(s"$dir/bands").drop("batch"),
+      Seq((9001L, 21L, 3, 3L), (9002L, 23L, 3, 3L), (9003L, 49L, 1, 7L))
+        .toDF("id", "sig", "band", "h"))
   }
 
-  test("Hamming-append broadcast gate actually flips the batch join strategy") {
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
-    val spark2 = spark; import spark2.implicits._
-    val oldBands = spark.range(0L, 500L)
-      .select(col("id"), (col("id") * 7L).as("sig"),
-        (col("id") % 4).cast("int").as("band"), (col("id") % 50).as("h"))
-    val newBanded = Seq((9001L, 21L, 3, 3L), (9002L, 23L, 3, 3L))
-      .toDF("id", "sig", "band", "h")
+  test("capped audio-index append: the store is never shuffled (batch-fp prune)") {
+    val (oldFps, newFps) = audioStore()
+    assertStoreNeverShuffled(noShuffledJoin = true) { (cap, mat) =>
+      graft.multimodal.Multimodal.audioAppendPairsTracked(oldFps, newFps, 1,
+        cap, mat)._1
+    }
+  }
+
+  test("capped LSH-index append: the store is never shuffled (batch-bucket prune)") {
+    val (oldBands, oldMeta, newBanded, newMeta) = lshStore()
+    assertStoreNeverShuffled(noShuffledJoin = false) { (cap, mat) =>
+      graft.dedup.Dedup.lshAppendPairs(oldBands, oldMeta, newBanded, newMeta,
+        0.5, cap, mat)._1
+    }
+  }
+
+  test("capped Hamming-index append: the store is never shuffled (batch-bucket prune)") {
+    val (oldBands, newBanded) = hammingStore()
+    assertStoreNeverShuffled(noShuffledJoin = false) { (cap, mat) =>
+      graft.dedup.HammingIndex.hammingAppendPairs(oldBands, newBanded,
+        maxHamming = 3, cap, mat)._1
+    }
+  }
+
+  test("capped LSH-index append: the pair report runs each stage and store scan once (AQE on)") {
+    val (oldBands, oldMeta, newBanded, newMeta) = lshStore()
+    val rep = repeatedWork { (cap, mat) =>
+      graft.dedup.Dedup.lshAppendPairs(oldBands, oldMeta, newBanded, newMeta,
+        0.5, cap, mat)._1
+    }
+    assert(rep.isEmpty, s"repeated work:\n${rep.mkString("\n")}")
+  }
+
+  test("capped Hamming-index append: the pair report runs each stage and store scan once (AQE on)") {
+    val (oldBands, newBanded) = hammingStore()
+    val rep = repeatedWork { (cap, mat) =>
+      graft.dedup.HammingIndex.hammingAppendPairs(oldBands, newBanded,
+        maxHamming = 3, cap, mat)._1
+    }
+    assert(rep.isEmpty, s"repeated work:\n${rep.mkString("\n")}")
+  }
+
+  test("capped audio-index append: the pair report runs each stage and store scan once (AQE on)") {
+    val (oldFps, newFps) = audioStore()
+    val rep = repeatedWork { (cap, mat) =>
+      graft.multimodal.Multimodal.audioAppendPairsTracked(oldFps, newFps, 1,
+        cap, mat)._1
+    }
+    assert(rep.isEmpty, s"repeated work:\n${rep.mkString("\n")}")
+  }
+
+  /** Broadcast joins across the pair plan and the materialised frames'
+    * plans, with the size threshold off: ONLY the explicit hint can
+    * produce one, so presence/absence isolates the gate's decision. */
+  private def assertGateFlips(
+      build: (Boolean, Materialised) => DataFrame): Unit = {
     val thr = "spark.sql.autoBroadcastJoinThreshold"
     val aqe = "spark.sql.adaptive.enabled"
     val (pThr, pAqe) = (spark.conf.get(thr), spark.conf.get(aqe))
     try {
       spark.conf.set(thr, "-1"); spark.conf.set(aqe, "false")
-      def bhjCount(broadcastBatch: Boolean): Int =
-        graft.dedup.HammingIndex.hammingAppendPairs(oldBands, newBanded,
-            maxHamming = 3, cap = 10L, broadcastBatch = broadcastBatch)
-          ._1.queryExecution.executedPlan
-          .collect { case j: BroadcastHashJoinExec => j }.size
+      def bhjCount(broadcastBatch: Boolean): Int = {
+        val mat = new Materialised
+        try appendPlans(build(broadcastBatch, mat), mat)
+          .map(_.collect { case j: BroadcastHashJoinExec => j }.size).sum
+        finally mat.release()
+      }
       assert(bhjCount(true) > 0,
         "gate=broadcast regime lost its broadcast joins")
       assert(bhjCount(false) == 0,
@@ -992,9 +1069,22 @@ class PlanSpec extends AnyFunSuite with CacheHygiene {
     } finally { spark.conf.set(thr, pThr); spark.conf.set(aqe, pAqe) }
   }
 
+  test("Hamming-append broadcast gate actually flips the batch join strategy") {
+    import org.apache.spark.sql.functions._
+    val spark2 = spark; import spark2.implicits._
+    val oldBands = spark.range(0L, 500L)
+      .select(col("id"), (col("id") * 7L).as("sig"),
+        (col("id") % 4).cast("int").as("band"), (col("id") % 50).as("h"))
+    val newBanded = Seq((9001L, 21L, 3, 3L), (9002L, 23L, 3, 3L))
+      .toDF("id", "sig", "band", "h")
+    assertGateFlips { (gate, mat) =>
+      graft.dedup.HammingIndex.hammingAppendPairs(oldBands, newBanded,
+        maxHamming = 3, cap = 10L, mat, broadcastBatch = gate)._1
+    }
+  }
+
   test("LSH-append broadcast gate actually flips the batch join strategy") {
     import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
     val spark2 = spark; import spark2.implicits._
     val oldBands = spark.range(0L, 500L)
       .select(col("id"), (col("id") % 16).cast("int").as("band"),
@@ -1003,22 +1093,9 @@ class PlanSpec extends AnyFunSuite with CacheHygiene {
       .select(col("id"), array(concat(lit("w"), col("id"))).as("sh"))
     val newBanded = Seq((9001L, 3, 3L), (9002L, 3, 3L)).toDF("id", "band", "h")
     val newMeta = Seq((9001L, Seq("w3")), (9002L, Seq("w3"))).toDF("id", "sh")
-    val thr = "spark.sql.autoBroadcastJoinThreshold"
-    val aqe = "spark.sql.adaptive.enabled"
-    val (pThr, pAqe) = (spark.conf.get(thr), spark.conf.get(aqe))
-    try {
-      // threshold off: ONLY the explicit hint can produce a broadcast
-      // join, so presence/absence isolates the gate's decision
-      spark.conf.set(thr, "-1"); spark.conf.set(aqe, "false")
-      def bhjCount(broadcastBatch: Boolean): Int =
-        graft.dedup.Dedup.lshAppendPairs(oldBands, oldMeta, newBanded,
-            newMeta, 0.5, cap = 10L, broadcastBatch = broadcastBatch)
-          ._1.queryExecution.executedPlan
-          .collect { case j: BroadcastHashJoinExec => j }.size
-      assert(bhjCount(true) > 0,
-        "gate=broadcast regime lost its broadcast joins")
-      assert(bhjCount(false) == 0,
-        "gate=shuffle regime still broadcasts the batch side")
-    } finally { spark.conf.set(thr, pThr); spark.conf.set(aqe, pAqe) }
+    assertGateFlips { (gate, mat) =>
+      graft.dedup.Dedup.lshAppendPairs(oldBands, oldMeta, newBanded, newMeta,
+        0.5, cap = 10L, mat, broadcastBatch = gate)._1
+    }
   }
 }

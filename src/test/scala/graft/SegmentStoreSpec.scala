@@ -440,6 +440,56 @@ class SegmentStoreSpec extends AnyFunSuite with CacheHygiene {
     assert(!fs.exists(lease), "B must release its own lease on exit")
   }
 
+  test("an append whose pair write fails leaves no cached data; re-ingest gives the same pairs") {
+    import graft.dedup.Dedup
+    val hc = spark.sparkContext.hadoopConfiguration
+    hc.set("fs.s3f.impl", classOf[FlakyMockFileSystem].getName)
+    hc.set("fs.s3f.impl.disable.cache", "true")
+    // docs 2k and 2k+1 are near-duplicates; batch b1 holds the odd ones
+    val docs = (0 until 200).map { i =>
+      val text = (0 until 30).map(j => s"w${i / 2 * 31 + j}").mkString(" ")
+      (i.toLong, if (i % 2 == 0) text else s"$text tail")
+    }.toDF("doc_id", "text")
+    val b0 = docs.filter(col("doc_id") % 2 === 0)
+    val b1 = docs.filter(col("doc_id") % 2 === 1)
+    def pairSet(df: org.apache.spark.sql.DataFrame) =
+      df.select("a", "b").as[(Long, Long)].collect().toSet
+    val cacheManager = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    // the LSH and the SimHash (Hamming) appends share the release discipline
+    val appends = Seq[(String, String => Unit, String => org.apache.spark.sql.DataFrame)](
+      ("lsh", Dedup.buildLshIndex(b0, "doc_id", "text", _),
+        Dedup.appendToLshIndex(spark, _, b1, "doc_id", "text", "b1", threshold = 0.5)),
+      ("simhash", Dedup.buildSimhashIndex(b0, "doc_id", "text", _),
+        Dedup.appendToSimhashIndex(spark, _, b1, "doc_id", "text", "b1", maxHamming = 12)))
+    for ((name, build, append) <- appends) {
+      val local = new java.io.File(s"target/qtmp/failed_append_$name").getAbsolutePath
+      val dir = s"s3f://test-bucket$local"
+      rm(local); rm(s"$local-ref")
+      build(dir)
+      spark.catalog.clearCache()
+      val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet
+      FlakyMockFileSystem.injectedFailures.set(0)
+      FlakyMockFileSystem.failCreateUnder = "/pairs/"
+      try intercept[Exception](append(dir))
+      finally FlakyMockFileSystem.failCreateUnder = null
+      assert(FlakyMockFileSystem.injectedFailures.get() > 0,
+        s"$name: no write failure was injected — the test proved nothing")
+      assert(cacheManager.isEmpty, s"$name: the failed append left frames cached")
+      assert(spark.sparkContext.getPersistentRDDs.keySet == rddsBefore,
+        s"$name: the failed append left cached blocks")
+      // nothing of the failed attempt reached the store's segments
+      assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$local/bands/batch=b1")))
+      val again = pairSet(append(dir))
+      build(s"$local-ref")
+      val want = pairSet(append(s"$local-ref"))
+      assert(want.nonEmpty, s"$name: the fixture should yield pairs")
+      assert(again == want, s"$name: re-ingest after the failure gave " +
+        s"extra=${again -- want} missing=${want -- again}")
+      assert(cacheManager.isEmpty, s"$name: a successful append left frames cached")
+    }
+  }
+
   test("naturalLeq: digit runs compare numerically") {
     assert(SegmentStore.naturalLeq("b2", "b10"))
     assert(!SegmentStore.naturalLeq("b10", "b2"))
