@@ -106,64 +106,35 @@ object Dedup {
       .otherwise(inter.cast("double") / (size(a) + size(b) - inter))
   }
 
-  /** Per-document cross-corpus duplicate n-gram fraction — the
-    * RefinedWeb/Gopher-style signal "what share of this doc's distinct
-    * n-grams also appear in at least one OTHER document". High values flag
-    * boilerplate and template spam that per-doc repetition metrics miss.
-    *
-    * Plan shape: one narrow shingle explode, a gram-keyed count aggregate
-    * (vocabulary-sized), a gram-keyed join back, and a per-doc aggregate —
-    * two shuffles total, both on the gram key. `wordShingles` emits
-    * DISTINCT shingles per doc, so `count(*)` per gram IS the number of
-    * containing documents.
-    *
-    * @param hashGrams the 100 TB switch: project `xxhash64(gram)` before
-    *   either shuffle, so the exchanges move 8-byte longs instead of
-    *   n-word strings (for 8-grams of ~7-char words, a ~7× shuffle-byte
-    *   reduction). Collisions are 2⁻⁶⁴-scale — astronomically below any
-    *   quality-signal tolerance. Off in the gate query only because the
-    *   oracle must replay gram identity in ANSI SQL; results are
-    *   spec-proved identical on the test corpus (PipelineSpec).
-    *
-    * Fraction uses the IEEE-stable floor form (see
-    * TextFunctions.qualityScore) — avg of exact 0.0/1.0 doubles is
-    * order-independent, and floor(x·10⁴+0.5)/10⁴ rounds identically on
-    * every engine.
-    */
   /** Asymmetric n-gram CONTAINMENT pairs: containment(A,B) =
     * |grams(A) ∩ grams(B)| / min(|grams(A)|, |grams(B)|) — the
     * quote/subset/excerpt signal symmetric Jaccard structurally misses
     * (a 50-gram doc fully quoted inside a 5000-gram doc has containment
     * 1.0 but Jaccard 0.01, below every LSH threshold).
     *
-    * Shape: an inverted gram index joined with itself — pairs are
-    * generated ONLY for docs sharing a gram (never all-pairs), grouped
-    * map-side combined. Pair fan-out per gram is df², so corpus-common
-    * grams dominate: `maxGramDf > 0` drops grams present in more docs
-    * than the cap from the index (boilerplate grams carry no containment
+    * Shape: an inverted index on `xxhash64(gram)` — pairs are generated
+    * ONLY for docs sharing a gram (never all-pairs), grouped map-side
+    * combined. Pair fan-out per gram is df², so corpus-common grams
+    * dominate: `maxGramDf > 0` drops grams present in more docs than the
+    * cap from the index (boilerplate grams carry no containment
     * evidence; the same census-prune discipline as minhashLshPairs'
-    * `maxBucket`). Sizes always count FULL gram sets. At 100 TB, switch
-    * the join key to `xxhash64(gram)` exactly as [[dupNgramFraction]]'s
-    * `hashGrams` does.
+    * `maxBucket`). Sizes always count FULL gram sets.
     *
     * Returns (a, b, common, containment) for a < b with
     * containment >= `minContainment`.
     */
   def containmentPairs(docs: DataFrame, idCol: String, textCol: String,
       shingleN: Int = 3, minContainment: Double = 0.5,
-      maxGramDf: Int = 0, hashGrams: Boolean = false,
-      mapSidePairs: Boolean = true): DataFrame = {
+      maxGramDf: Int = 0): DataFrame = {
     val sh = docs.select(col(idCol).as("doc_id"),
       wordShingles(col(textCol), shingleN).as("sh"))
     val sizes = sh.select(col("doc_id"), size(col("sh")).as("sz"))
       .filter(col("sz") > 0)
-    // hashGrams: the dupNgramFraction scale switch — join keys become
-    // 8-byte xxhash64 longs; counts (and therefore containment) are
-    // unchanged up to 2⁻⁶⁴-scale collisions, so gates running this path
-    // still hash-match the string-form oracle
+    // gram keys are 8-byte xxhash64 longs (dupNgramFraction's keying):
+    // counts, and therefore containment, are unchanged up to 2⁻⁶⁴-scale
+    // collisions, so d21 hash-matches its string-form oracle
     val expl = sh.select(col("doc_id"), explode(col("sh")).as("g0"))
-    val inv0 = expl.select(col("doc_id"),
-      (if (hashGrams) xxhash64(col("g0")) else col("g0")).as("g"))
+    val inv0 = expl.select(col("doc_id"), xxhash64(col("g0")).as("g"))
     val inv =
       if (maxGramDf > 0) {
         val hot = inv0.groupBy(col("g")).agg(count(lit(1)).as("df"))
@@ -179,59 +150,49 @@ object Dedup {
     // gram exchange, ONE (g, id) sort, and a partition-local run-walk
     // that emits each gram's id-buffer combinations directly, skipping
     // the second sort and the SMJ merge machinery entirely. ids are
-    // sorted within the run so a < b holds by construction; counts are
-    // exact (keyed on the true gram, no collision exposure). The walk
+    // sorted within the run so a < b holds by construction. The walk
     // buffers ONE gram's ids at a time — bounded by the df cap when
     // maxGramDf > 0; the uncapped regime has the same Σdf² exposure the
     // join had (a single hot gram simply arrives as one long run).
-    // Hashed-gram (long-key) path only; the string path keeps the join.
-    val pairCounts: DataFrame =
-      if (hashGrams && mapSidePairs) {
-        val spark = docs.sparkSession
-        import spark.implicits._
-        inv.select(col("g"), col("doc_id"))
-          .repartition(col("g"))
-          .sortWithinPartitions(col("g"), col("doc_id"))
-          .as[(Long, Long)]
-          .mapPartitions { it =>
-            val buf = new scala.collection.mutable.ArrayBuffer[Long](64)
-            var curG = 0L
-            var open = false
-            def pairs(): Iterator[(Long, Long)] =
-              if (buf.length < 2) { buf.clear(); Iterator.empty }
-              else {
-                val ids = buf.toArray
-                buf.clear()
-                ids.iterator.zipWithIndex.flatMap { case (a, i) =>
-                  ids.iterator.drop(i + 1).map(b => (a, b))
-                }
-              }
-            val out = it.flatMap { case (g, id) =>
-              if (open && g == curG) { buf += id; Iterator.empty }
-              else {
-                val emitted = if (open) pairs() else Iterator.empty
-                curG = g; open = true; buf += id
-                emitted
-              }
-            }
-            out ++ new Iterator[(Long, Long)] {
-              private var done = false
-              private var inner: Iterator[(Long, Long)] = null
-              def hasNext: Boolean = {
-                if (!done) { inner = pairs(); done = true }
-                inner.hasNext
-              }
-              def next(): (Long, Long) = { hasNext; inner.next() }
+    val spark = docs.sparkSession
+    import spark.implicits._
+    val pairCounts = inv.select(col("g"), col("doc_id"))
+      .repartition(col("g"))
+      .sortWithinPartitions(col("g"), col("doc_id"))
+      .as[(Long, Long)]
+      .mapPartitions { it =>
+        val buf = new scala.collection.mutable.ArrayBuffer[Long](64)
+        var curG = 0L
+        var open = false
+        def pairs(): Iterator[(Long, Long)] =
+          if (buf.length < 2) { buf.clear(); Iterator.empty }
+          else {
+            val ids = buf.toArray
+            buf.clear()
+            ids.iterator.zipWithIndex.flatMap { case (a, i) =>
+              ids.iterator.drop(i + 1).map(b => (a, b))
             }
           }
-          .toDF("a", "b")
-          .groupBy(col("a"), col("b")).agg(count(lit(1)).as("common"))
-      } else {
-        inv.select(col("g"), col("doc_id").as("a"))
-          .join(inv.select(col("g"), col("doc_id").as("b")), "g")
-          .filter(col("a") < col("b"))
-          .groupBy(col("a"), col("b")).agg(count(lit(1)).as("common"))
+        val out = it.flatMap { case (g, id) =>
+          if (open && g == curG) { buf += id; Iterator.empty }
+          else {
+            val emitted = if (open) pairs() else Iterator.empty
+            curG = g; open = true; buf += id
+            emitted
+          }
+        }
+        out ++ new Iterator[(Long, Long)] {
+          private var done = false
+          private var inner: Iterator[(Long, Long)] = null
+          def hasNext: Boolean = {
+            if (!done) { inner = pairs(); done = true }
+            inner.hasNext
+          }
+          def next(): (Long, Long) = { hasNext; inner.next() }
+        }
       }
+      .toDF("a", "b")
+      .groupBy(col("a"), col("b")).agg(count(lit(1)).as("common"))
     pairCounts
       .join(sizes.select(col("doc_id").as("a"), col("sz").as("n_a")), "a")
       .join(sizes.select(col("doc_id").as("b"), col("sz").as("n_b")), "b")
@@ -241,12 +202,32 @@ object Dedup {
       .select(col("a"), col("b"), col("common"), col("containment"))
   }
 
+  /** Per-document cross-corpus duplicate n-gram fraction — the
+    * RefinedWeb/Gopher-style signal "what share of this doc's distinct
+    * n-grams also appear in at least one OTHER document". High values flag
+    * boilerplate and template spam that per-doc repetition metrics miss.
+    *
+    * Plan shape: one narrow shingle explode, a gram-keyed count aggregate
+    * (vocabulary-sized), a gram-keyed join back, and a per-doc aggregate —
+    * two shuffles total, both on the gram key. `wordShingles` emits
+    * DISTINCT shingles per doc, so `count(*)` per gram IS the number of
+    * containing documents.
+    *
+    * Grams are keyed by `xxhash64(gram)` before either shuffle, so the
+    * exchanges move 8-byte longs instead of n-word strings (for 8-grams
+    * of ~7-char words, a ~7× shuffle-byte reduction). Collisions are
+    * 2⁻⁶⁴-scale — astronomically below any quality-signal tolerance.
+    *
+    * Fraction uses the IEEE-stable floor form (see
+    * TextFunctions.qualityScore) — avg of exact 0.0/1.0 doubles is
+    * order-independent, and floor(x·10⁴+0.5)/10⁴ rounds identically on
+    * every engine.
+    */
   def dupNgramFraction(df: DataFrame, textCol: String, idCol: String,
-      n: Int, hashGrams: Boolean): DataFrame = {
+      n: Int): DataFrame = {
     val exploded = df.select(col(idCol),
       explode(wordShingles(col(textCol), n)).as("g0"))
-    val grams = exploded.select(col(idCol),
-      (if (hashGrams) xxhash64(col("g0")) else col("g0")).as("g"))
+    val grams = exploded.select(col(idCol), xxhash64(col("g0")).as("g"))
     val counts = grams.groupBy(col("g")).agg(count(lit(1)).as("nd"))
     grams.join(counts, "g")
       .groupBy(col(idCol))
@@ -369,24 +350,20 @@ object Dedup {
     * Plan at 100 TB: narrow posexplode → one paragraph-keyed count
     * (map-side combined: boilerplate collapses before the exchange) →
     * join back on the paragraph key → one doc-keyed reassembly
-    * aggregate. With `hashParagraphs` both wide stages key on
-    * `xxhash64(para)` 8-byte longs instead of paragraph strings — the
-    * same 100 TB shuffle-byte switch as d11/d12's `hashGrams`
-    * (collisions 2⁻⁶⁴; off in the gate so the oracle can replay content
-    * identity, spec-proved identical on the corpus).
+    * aggregate. Both wide stages key on `xxhash64(para)` 8-byte longs
+    * instead of paragraph strings, as d11/d12 key on hashed grams
+    * (collisions 2⁻⁶⁴).
     *
     * @return `idCol`, `n_kept` (surviving paragraph count), `text_out`
     *         (reassembled doc)
     */
   def dropDuplicateParagraphs(df: DataFrame, idCol: String, textCol: String,
-      sep: String = "\n", minOccurrences: Int = 2,
-      hashParagraphs: Boolean = false): DataFrame = {
+      sep: String = "\n", minOccurrences: Int = 2): DataFrame = {
     require(minOccurrences >= 2, s"minOccurrences=$minOccurrences must be >= 2")
     val paras = df.select(col(idCol),
       posexplode(split(col(textCol), java.util.regex.Pattern.quote(sep)))
         .as(Seq("pos", "para")))
-    val keyed = paras.withColumn("__k",
-      if (hashParagraphs) xxhash64(col("para")) else col("para"))
+    val keyed = paras.withColumn("__k", xxhash64(col("para")))
     // corpus-wide paragraph counts via ONE paragraph-partitioned window
     // (d12's discipline): the former count-aggregate + join-back
     // recomputed the posexplode subtree for the count build, and the
@@ -677,28 +654,25 @@ object Dedup {
     *     (windows at distance ≤ k merge; a fixed k makes the island rule
     *     a single lag comparison).
     *
-    * @param hashGrams the 100 TB switch (same as [[dupNgramFraction]]):
-    *   project `xxhash64(gram)` before the shuffle so both wide stages
-    *   move 8-byte longs instead of k-word strings. Off in the gate
-    *   query only so the oracle can replay gram identity in ANSI SQL.
+    * Windows are keyed by `xxhash64(gram)` (as in [[dupNgramFraction]])
+    * so both wide stages move 8-byte longs instead of k-word strings.
+    *
     * @return (idCol, span_start, span_end) — token-index spans
     *   (inclusive, 0-based), one row per maximal duplicated span.
     */
   def duplicateSpans(df: DataFrame, idCol: String, textCol: String,
-      k: Int = 8, minOccurrences: Long = 2,
-      hashGrams: Boolean = false): DataFrame = {
+      k: Int = 8, minOccurrences: Long = 2): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(k >= 1, s"window size k must be >= 1, got $k")
     val toks = df.select(col(idCol).as("id"), split(col(textCol), " ").as("t"))
-    val grams0 = toks.select(col("id"),
+    val grams = toks.select(col("id"),
       explode(when(size(col("t")) >= k,
         transform(sequence(lit(0), size(col("t")) - k),
           i => struct(i.as("pos"),
             concat_ws(" ", slice(col("t"), i + 1, lit(k))).as("gram"))))
         .otherwise(array())).as("pg"))
-      .select(col("id"), col("pg.pos").as("pos"), col("pg.gram").as("gram"))
-    val grams = if (hashGrams) grams0.withColumn("gram", xxhash64(col("gram")))
-      else grams0
+      .select(col("id"), col("pg.pos").as("pos"),
+        xxhash64(col("pg.gram")).as("gram"))
     // duplicated positions via ONE gram-partitioned window count instead
     // of the former count-aggregate + semi-join: the aggregate's build
     // side recomputed the whole corpus-scan → window-generation subtree
@@ -734,7 +708,7 @@ object Dedup {
     * Docs reduced to nothing come back as "" for downstream filters.
     *
     * Plan at 100 TB: the span computation is d12's (two gram-keyed
-    * shuffles of 8-byte longs under `hashGrams`); spans are SPARSE
+    * shuffles of 8-byte longs); spans are SPARSE
     * (only duplicated regions), collected per doc by one aggregate and
     * joined back; the cut itself is a narrow index-aware
     * `transform`+`exists`+`filter` chain in codegen — per-token work is
@@ -743,9 +717,8 @@ object Dedup {
     * @return `idCol`, `n_kept` (surviving token count), `text_out`
     */
   def removeDuplicateSpans(df: DataFrame, idCol: String, textCol: String,
-      k: Int = 8, minOccurrences: Long = 2,
-      hashGrams: Boolean = false): DataFrame = {
-    val spans = duplicateSpans(df, idCol, textCol, k, minOccurrences, hashGrams)
+      k: Int = 8, minOccurrences: Long = 2): DataFrame = {
+    val spans = duplicateSpans(df, idCol, textCol, k, minOccurrences)
       .groupBy(col(idCol))
       .agg(collect_list(struct(col("span_start"), col("span_end"))).as("__spans"))
     val t = split(col(textCol), " ")
@@ -772,9 +745,8 @@ object Dedup {
     * Docs with no duplicated span report 0.0. One extra broadcast-able
     * join of the (sparse) span list against per-doc token counts. */
   def duplicateSpanStats(df: DataFrame, idCol: String, textCol: String,
-      k: Int = 8, minOccurrences: Long = 2,
-      hashGrams: Boolean = true): DataFrame = {
-    val spans = duplicateSpans(df, idCol, textCol, k, minOccurrences, hashGrams)
+      k: Int = 8, minOccurrences: Long = 2): DataFrame = {
+    val spans = duplicateSpans(df, idCol, textCol, k, minOccurrences)
       .groupBy(col(idCol))
       .agg(sum(col("span_end") - col("span_start") + 1).as("dup_toks"))
     df.select(col(idCol), size(split(col(textCol), " ")).cast("long").as("n_toks"))

@@ -304,32 +304,6 @@ object TextFunctions {
   // verbatim in both Java regex and DuckDB RE2 — gate t31 hash-verifies
   // the extraction against a full DuckDB replay.
 
-  /** script/style payloads and comments: dotall + case-insensitive, lazy */
-  val HtmlScriptRe = "(?is)<script[^>]*>.*?</script>"
-  val HtmlStyleRe = "(?is)<style[^>]*>.*?</style>"
-  val HtmlCommentRe = "(?s)<!--.*?-->"
-  /** block-level boundaries (opening OR closing tags). Alternation is
-    * ordered longest-prefix-first — both Java regex and RE2 are
-    * leftmost-FIRST, so `pre` must precede `p` or `<pre>` would try the
-    * `p` branch and only match via backtracking. */
-  val HtmlBlockRe = "(?i)</?(?:blockquote|section|article|header|footer|" +
-    "aside|table|form|nav|pre|div|ul|ol|li|tr|td|th|h[1-6]|p)(?:\\s[^>]*)?>"
-  val HtmlTagRe = "<[^>]*>"
-  /** anchor INNER text (tag-free span only, so nested markup never spans
-    * a match); `(?:\s...)` after `a` so `<article>` is not an anchor */
-  val HtmlAnchorRe = "(?i)<a(?:\\s[^>]*)?>([^<]*)</a>"
-
-  /** Minimal named-entity decode (the five entities that survive into
-    * block text plus nbsp). `&amp;` decodes LAST so a double-escaped
-    * `&amp;gt;` yields the literal `&gt;` a browser would render. */
-  def htmlEntityDecode(c: Column): Column = {
-    val named = Seq("&lt;" -> "<", "&gt;" -> ">", "&quot;" -> "\"",
-      "&#39;" -> "'", "&nbsp;" -> " ").foldLeft(c) {
-      case (acc, (e, r)) => replace(acc, lit(e), lit(r))
-    }
-    replace(named, lit("&amp;"), lit("&"))
-  }
-
   /** Main-content extraction from raw HTML — the jusText heuristic core:
     *
     *  1. strip `<script>`/`<style>` payloads and comments;
@@ -347,35 +321,11 @@ object TextFunctions {
     * UDF, no shuffle, no regex — a narrow projection at scan
     * parallelism on any corpus size. Deterministic; the integer form
     * `3 * linkChars <= textChars` avoids float ratios so the DuckDB
-    * replay is bit-exact. [[htmlExtractRegex]] keeps the original
-    * regex-battery column composition; HtmlExtractParitySpec pins the
-    * two byte-identical (adversarial cases + full staged corpus). */
+    * replay is bit-exact. HtmlExtractParitySpec pins it byte-identical
+    * to the original regex-battery column composition, kept in the test
+    * tree (adversarial cases + full staged corpus). */
   def htmlExtract(c: Column, minChars: Int = 25): Column =
     graft.plans.HtmlExtractExpression.htmlExtract(c, minChars)
-
-  /** The regex-battery form of [[htmlExtract]] — the executable
-    * specification the native kernel is parity-pinned against (and the
-    * shape the DuckDB oracles replay verbatim). Slower: ~6 regex passes
-    * per document vs the kernel's fused walk; not used in query paths
-    * since r17. */
-  def htmlExtractRegex(c: Column, minChars: Int = 25): Column = {
-    val cleaned = regexp_replace(regexp_replace(regexp_replace(c,
-      HtmlScriptRe, " "), HtmlStyleRe, " "), HtmlCommentRe, " ")
-    val scored = transform(split(cleaned, HtmlBlockRe), b => {
-      // decode BEFORE the whitespace collapse: an `&nbsp;` decodes to a
-      // space that must collapse/trim like any other, not survive as
-      // padding that inflates the minChars/link-density lengths
-      val txt = trim(regexp_replace(htmlEntityDecode(
-        regexp_replace(b, HtmlTagRe, " ")), "\\s+", " "))
-      val lnk = length(array_join(
-        regexp_extract_all(b, lit(HtmlAnchorRe), lit(1)), ""))
-      struct(txt.as("txt"), lnk.as("lnk"))
-    })
-    val kept = filter(scored, s =>
-      length(s.getField("txt")) >= minChars &&
-        s.getField("lnk") * 3 <= length(s.getField("txt")))
-    array_join(transform(kept, s => s.getField("txt")), "\n")
-  }
 
   /** double-quoted href attribute values of anchor tags (RE2-safe) */
   val HtmlHrefRe = "(?i)<a\\s[^>]*href=\"([^\"]*)\""

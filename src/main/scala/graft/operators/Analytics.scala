@@ -121,8 +121,8 @@ object Analytics {
     *
     * @param quantized snap each weighted term to the 1e-6 grid and sum as
     *   BIGINT micro-units — integer addition is order-independent, so the
-    *   result is bit-replayable by any engine regardless of summation order
-    *   (same spirit as the `hashGrams` scale switches). Default natural
+    *   result is bit-replayable by any engine regardless of summation
+    *   order. Default natural
     *   double math (differs from quantized by < 2e-6 per row).
     *
     * Null values: collect_list skips them, so a null shrinks the window

@@ -25,10 +25,9 @@ import org.apache.spark.sql.functions._
   *    gram keys (Catalyst broadcasts them when they fit — they're
   *    vocabulary-sized) and the vocab-size scalar crosses in as a
   *    broadcast of one row;
-  *  - `hashTokens` is the 100 TB switch: project `xxhash64` of the tokens
-  *    before any exchange so shuffles move 8-byte longs, not words.
-  *    Counts — and therefore scores — are unchanged up to 2⁻⁶⁴-scale
-  *    collisions (spec-verified equal on the test corpus).
+  *  - tokens are keyed by `xxhash64` before any exchange so shuffles
+  *    move 8-byte longs, not words. Counts — and therefore scores — are
+  *    unchanged up to 2⁻⁶⁴-scale collisions.
   */
 object LanguageModel {
 
@@ -56,12 +55,12 @@ object LanguageModel {
     * accumulated error ≪ the 1e-4 quantum. Applies equally to
     * mooreLewisScore and the d12/p08 dup_frac roundings.
     */
-  def bigramLogLikelihood(df: DataFrame, idCol: String, textCol: String,
-      hashTokens: Boolean = false): DataFrame = {
-    val bg = docBigrams(df, idCol, textCol, hashTokens)
+  def bigramLogLikelihood(df: DataFrame, idCol: String,
+      textCol: String): DataFrame = {
+    val bg = docBigrams(df, idCol, textCol)
     val cb = bg.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("cb"))
     val ch = cb.groupBy(col("w1")).agg(sum(col("cb")).as("ch"))
-    val v = vocabSize(df, textCol, hashTokens)
+    val v = vocabSize(df, textCol)
     bg.join(cb, Seq("w1", "w2")).join(ch, Seq("w1")).crossJoin(broadcast(v))
       .groupBy(col("id"))
       .agg(count(lit(1)).as("n_bigrams"),
@@ -70,10 +69,10 @@ object LanguageModel {
       .select(col("id").as(idCol), col("n_bigrams"), col("ll"))
   }
 
-  /** (id, w1, w2) bigram stream — narrow transform(sequence(...)). */
-  private def docBigrams(df: DataFrame, idCol: String, textCol: String,
-      hashTokens: Boolean): DataFrame = {
-    def key(c: Column): Column = if (hashTokens) xxhash64(c) else c
+  /** (id, w1, w2) bigram stream of hashed tokens — narrow
+    * transform(sequence(...)). */
+  private def docBigrams(df: DataFrame, idCol: String,
+      textCol: String): DataFrame =
     df.select(col(idCol).as("id"), split(col(textCol), " ").as("t"))
       .select(col("id"),
         explode(when(size(col("t")) >= 2,
@@ -81,16 +80,13 @@ object LanguageModel {
             i => struct(element_at(col("t"), i + 1).as("w1"),
               element_at(col("t"), i + 2).as("w2"))))
           .otherwise(array())).as("b"))
-      .select(col("id"), key(col("b.w1")).as("w1"), key(col("b.w2")).as("w2"))
-  }
+      .select(col("id"), xxhash64(col("b.w1")).as("w1"),
+        xxhash64(col("b.w2")).as("w2"))
 
   /** one-row distinct-token count, aliased `v`. */
-  private def vocabSize(df: DataFrame, textCol: String,
-      hashTokens: Boolean): DataFrame = {
-    def key(c: Column): Column = if (hashTokens) xxhash64(c) else c
+  private def vocabSize(df: DataFrame, textCol: String): DataFrame =
     df.select(explode(split(col(textCol), " ")).as("tok0"))
-      .agg(countDistinct(key(col("tok0"))).as("v"))
-  }
+      .agg(countDistinct(xxhash64(col("tok0"))).as("v"))
 
   /** Per-document average log-likelihood under an INTERPOLATED trigram
     * model (Jelinek–Mercer mixing, the KenLM-adjacent shape one order up
@@ -111,15 +107,13 @@ object LanguageModel {
     * vocabulary-order size under map-side combine, scoring joins on gram
     * keys (broadcast when they fit), λ and V are scalars. The mixture is
     * written as one fixed left-to-right expression so IEEE evaluation is
-    * engine-identical; `hashTokens` is the same 100 TB shuffle-bytes
-    * switch. Documents with < 3 tokens have no trigrams and are absent.
+    * engine-identical; tokens are hashed as in the bigram form.
+    * Documents with < 3 tokens have no trigrams and are absent.
     */
   def trigramInterpolatedLL(df: DataFrame, idCol: String, textCol: String,
-      hashTokens: Boolean = false,
       lambdas: (Double, Double, Double) = (0.6, 0.3, 0.1)): DataFrame = {
     val (l3, l2, l1) = lambdas
     require(math.abs(l3 + l2 + l1 - 1.0) < 1e-9, s"lambdas must sum to 1")
-    def key(c: Column): Column = if (hashTokens) xxhash64(c) else c
     val tg = df.select(col(idCol).as("id"), split(col(textCol), " ").as("t"))
       .select(col("id"),
         explode(when(size(col("t")) >= 3,
@@ -128,9 +122,9 @@ object LanguageModel {
               element_at(col("t"), i + 2).as("w2"),
               element_at(col("t"), i + 3).as("w3"))))
           .otherwise(array())).as("g"))
-      .select(col("id"), key(col("g.w1")).as("w1"), key(col("g.w2")).as("w2"),
-        key(col("g.w3")).as("w3"))
-    val bg = docBigrams(df, idCol, textCol, hashTokens)
+      .select(col("id"), xxhash64(col("g.w1")).as("w1"),
+        xxhash64(col("g.w2")).as("w2"), xxhash64(col("g.w3")).as("w3"))
+    val bg = docBigrams(df, idCol, textCol)
     val c3 = tg.groupBy(col("w1"), col("w2"), col("w3"))
       .agg(count(lit(1)).as("c3"))
     val ch3 = c3.groupBy(col("w1"), col("w2")).agg(sum(col("c3")).as("ch3"))
@@ -139,7 +133,7 @@ object LanguageModel {
     val chb = cb.groupBy(col("b1")).agg(sum(col("cb")).as("chb"))
       .withColumnRenamed("b1", "h1")
     val toks = df.select(explode(split(col(textCol), " ")).as("tok0"))
-    val cu = toks.select(key(col("tok0")).as("w"))
+    val cu = toks.select(xxhash64(col("tok0")).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("cu"))
     // N and V derive from the unigram count table — sum(cu) ≡ token
     // count, count(*) over cu ≡ countDistinct over the token stream — so
@@ -180,24 +174,24 @@ object LanguageModel {
     * tables collapse to vocabulary size under map-side combine before
     * their exchanges; target-side counts join LEFT (unseen bigrams get
     * count 0, smoothing keeps the log finite); the two one-row vocab
-    * frames broadcast. `hashTokens` as elsewhere.
+    * frames broadcast. Tokens are hashed as elsewhere.
     */
   def mooreLewisScore(df: DataFrame, idCol: String, textCol: String,
-      targetCond: Column, hashTokens: Boolean = false): DataFrame = {
-    val bg = docBigrams(df, idCol, textCol, hashTokens)
+      targetCond: Column): DataFrame = {
+    val bg = docBigrams(df, idCol, textCol)
     val tgt = df.filter(targetCond)
     // an empty target would make vt = 0 and the smoothed target term
     // (0+1)/(0+0) — non-ANSI division yields NULL and every score would
     // silently be NULL; fail loud instead (cheap limit-1 probe)
     require(!tgt.isEmpty,
       "mooreLewisScore: targetCond matches no rows — no target model to train")
-    val bgT = docBigrams(tgt, idCol, textCol, hashTokens)
+    val bgT = docBigrams(tgt, idCol, textCol)
     val cbG = bg.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("cbg"))
     val chG = cbG.groupBy(col("w1")).agg(sum(col("cbg")).as("chg"))
     val cbT = bgT.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("cbt"))
     val chT = cbT.groupBy(col("w1")).agg(sum(col("cbt")).as("cht"))
-    val vG = vocabSize(df, textCol, hashTokens).withColumnRenamed("v", "vg")
-    val vT = vocabSize(tgt, textCol, hashTokens).withColumnRenamed("v", "vt")
+    val vG = vocabSize(df, textCol).withColumnRenamed("v", "vg")
+    val vT = vocabSize(tgt, textCol).withColumnRenamed("v", "vt")
     bg.join(cbG, Seq("w1", "w2")).join(chG, Seq("w1"))
       .join(cbT, Seq("w1", "w2"), "left_outer")
       .join(chT, Seq("w1"), "left_outer")
@@ -222,9 +216,9 @@ object LanguageModel {
     * with add-one smoothing: p̂(b) = (c(b) + 1) / (total + B), B = distinct
     * bigrams in the raw corpus. Positive means "looks like the target";
     * [[dsirSample]] then resamples k docs ∝ w(x) without replacement.
-    * The paper hashes n-grams into 10⁴ buckets — `hashGrams` is that
-    * switch (xxhash64 before any exchange; the un-hashed form exists so
-    * the gate oracle can replay counts relationally, as t11/t14 do).
+    * The paper hashes n-grams into 10⁴ buckets; here each token is
+    * keyed by xxhash64 before any exchange, the near-collision-free
+    * analogue.
     *
     * Scale shape: identical to [[mooreLewisScore]] — both count tables
     * collapse to vocabulary² under map-side combine before their
@@ -235,12 +229,12 @@ object LanguageModel {
     * (same FP-stability argument as [[bigramLogLikelihood]]).
     */
   def dsirLogWeight(df: DataFrame, idCol: String, textCol: String,
-      targetCond: Column, hashGrams: Boolean = false): DataFrame = {
+      targetCond: Column): DataFrame = {
     val tgt = df.filter(targetCond)
     require(!tgt.isEmpty,
       "dsirLogWeight: targetCond matches no rows — no target model to fit")
-    val bg = docBigrams(df, idCol, textCol, hashGrams)
-    val bgT = docBigrams(tgt, idCol, textCol, hashGrams)
+    val bg = docBigrams(df, idCol, textCol)
+    val bgT = docBigrams(tgt, idCol, textCol)
     val cR = bg.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("cr"))
     val cT = bgT.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("ct"))
     val rTot = cR.agg(sum(col("cr")).cast("double").as("rt"),
@@ -276,10 +270,9 @@ object LanguageModel {
     * `TakeOrderedAndProject` — O(k) driver state at any corpus size.
     */
   def dsirSample(df: DataFrame, idCol: String, textCol: String,
-      targetCond: Column, k: Int, salt: String,
-      hashGrams: Boolean = false): DataFrame = {
+      targetCond: Column, k: Int, salt: String): DataFrame = {
     require(k >= 1, s"sample size k=$k must be >= 1")
-    val lw = dsirLogWeight(df, idCol, textCol, targetCond, hashGrams)
+    val lw = dsirLogWeight(df, idCol, textCol, targetCond)
     val gumbel = -log(-log(graft.operators.Splits.mdUniform(col(idCol), salt)))
     lw.withColumn("__g", col("dsir_logw") + gumbel)
       .orderBy(col("__g").desc, col(idCol))
@@ -309,11 +302,10 @@ object LanguageModel {
     * @return idCol, classCol, `ll`, `bucket` (1 = head .. nBuckets = tail)
     */
   def perplexityBuckets(df: DataFrame, idCol: String, textCol: String,
-      classCol: String, nBuckets: Int = 3,
-      hashTokens: Boolean = false): DataFrame = {
+      classCol: String, nBuckets: Int = 3): DataFrame = {
     require(nBuckets >= 2, s"nBuckets=$nBuckets must be >= 2")
     import org.apache.spark.sql.expressions.Window
-    val scored = bigramLogLikelihood(df, idCol, textCol, hashTokens)
+    val scored = bigramLogLikelihood(df, idCol, textCol)
     val w = Window.partitionBy(col(classCol))
       .orderBy(col("ll").desc, col(idCol))
     scored.join(df.select(col(idCol), col(classCol)), Seq(idCol))
@@ -348,10 +340,10 @@ object LanguageModel {
     * (BASELINE.md's t19b row: 2.09 s vs 1.28 s at sf0.1, parity at
     * sf10). */
   def perplexityBucketsAuto(df: DataFrame, idCol: String, textCol: String,
-      classCol: String, nBuckets: Int = 3, hashTokens: Boolean = false,
+      classCol: String, nBuckets: Int = 3,
       windowCeiling: Long = 50000000L): DataFrame =
     perplexityBucketsAutoTracked(df, idCol, textCol, classCol, nBuckets,
-      hashTokens, windowCeiling)._1
+      windowCeiling)._1
 
   /** [[perplexityBucketsAuto]] returning the cache handle of whichever
     * regime it picked (the window form persists nothing — its handle is
@@ -359,15 +351,14 @@ object LanguageModel {
     * Callers release uniformly without knowing which regime ran. */
   def perplexityBucketsAutoTracked(df: DataFrame, idCol: String,
       textCol: String, classCol: String, nBuckets: Int = 3,
-      hashTokens: Boolean = false, windowCeiling: Long = 50000000L)
+      windowCeiling: Long = 50000000L)
       : (DataFrame, graft.dedup.Dedup.CacheHandle) = {
     val maxClass = Analytics.maxGroupSize(df, Seq(classCol))
     if (maxClass <= windowCeiling)
-      (perplexityBuckets(df, idCol, textCol, classCol, nBuckets, hashTokens),
+      (perplexityBuckets(df, idCol, textCol, classCol, nBuckets),
         graft.dedup.Dedup.emptyCacheHandle)
     else
-      perplexityBucketsScalableTracked(df, idCol, textCol, classCol, nBuckets,
-        hashTokens)
+      perplexityBucketsScalableTracked(df, idCol, textCol, classCol, nBuckets)
   }
 
   /** [[perplexityBuckets]]'s SCALE twin — byte-identical output, no
@@ -399,17 +390,15 @@ object LanguageModel {
     * it after the result's terminal action. This overload is kept for
     * harness callers that clearCache() between queries. */
   def perplexityBucketsScalable(df: DataFrame, idCol: String, textCol: String,
-      classCol: String, nBuckets: Int = 3,
-      hashTokens: Boolean = false): DataFrame =
-    perplexityBucketsScalableTracked(df, idCol, textCol, classCol, nBuckets,
-      hashTokens)._1
+      classCol: String, nBuckets: Int = 3): DataFrame =
+    perplexityBucketsScalableTracked(df, idCol, textCol, classCol,
+      nBuckets)._1
 
   /** [[perplexityBucketsScalable]] plus the [[graft.dedup.Dedup.CacheHandle]]
     * releasing its range-sorted persist — invoke after the returned
     * frame's terminal action (same contract as Dedup's tracked forms). */
   def perplexityBucketsScalableTracked(df: DataFrame, idCol: String,
-      textCol: String, classCol: String, nBuckets: Int = 3,
-      hashTokens: Boolean = false)
+      textCol: String, classCol: String, nBuckets: Int = 3)
       : (DataFrame, graft.dedup.Dedup.CacheHandle) = {
     require(nBuckets >= 2, s"nBuckets=$nBuckets must be >= 2")
     // the typed (Long, String, Double) pipeline narrows the id contract
@@ -423,7 +412,7 @@ object LanguageModel {
         s"${df.schema(idCol).dataType.simpleString} — use perplexityBuckets")
     val spark = df.sparkSession
     import spark.implicits._
-    val scored = bigramLogLikelihood(df, idCol, textCol, hashTokens)
+    val scored = bigramLogLikelihood(df, idCol, textCol)
       .join(df.select(col(idCol), col(classCol)), Seq(idCol))
       .select(col(idCol).cast("long"), col(classCol).cast("string"),
         col("ll").cast("double"))

@@ -178,7 +178,7 @@ object PipelineQueries {
         .orderBy(col("source"))),
 
     // -- asymmetric containment pairs: excerpt/quote detection ------------
-    // inverted gram index self-join (pairs only for docs SHARING a gram);
+    // hashed inverted gram index (pairs only for docs SHARING a gram);
     // containment over min gram-set size catches subsets Jaccard misses.
     // maxGramDf=50 is the PRODUCTION skew guard, replayed by the oracle;
     // it binds only beyond gate scale (sf0.01 max gram df = 7, sf0.1 = 25
@@ -186,8 +186,7 @@ object PipelineQueries {
     // df grows with corpus size and the cap bounds Σdf² pair fan-out)
     "d21_containment" -> ((s, d) =>
       Dedup.containmentPairs(Tables.documents(s, d), "doc_id", "text",
-          shingleN = 3, minContainment = 0.5, maxGramDf = 50,
-          hashGrams = true)
+          shingleN = 3, minContainment = 0.5, maxGramDf = 50)
         .withColumn("containment", round(col("containment"), 4))
         // NOTE (r16): orderByStaged measured a wash here — the pair
         // aggregate's exchange already bounds the resample re-run
@@ -915,14 +914,10 @@ object PipelineQueries {
 
     // -- cross-document duplicate n-gram fraction ------------------------
     // the RefinedWeb/Gopher-style contamination signal: what fraction of a
-    // doc's distinct 8-grams also occur in OTHER documents. Gate form uses
-    // gram strings so DuckDB can replay it; `Dedup.dupNgramFraction` offers
-    // the 100 TB shape (grams hashed to int64 before either shuffle),
-    // spec-proved equal in PipelineSpec.
+    // doc's distinct 8-grams also occur in OTHER documents.
     "d11_dup_ngram_fraction" -> ((s, d) =>
       Dedup.dupNgramFraction(
-        Tables.documents(s, d), textCol = "text", idCol = "doc_id",
-        n = 8, hashGrams = false)
+        Tables.documents(s, d), textCol = "text", idCol = "doc_id", n = 8)
         .orderBy(col("doc_id"))),
 
     // -- per-group distribution stats: exact percentiles by language -----
@@ -1453,30 +1448,27 @@ object PipelineQueries {
 
     // -- exact duplicate-substring spans (Lee et al. 2021 ExactSubstr,
     // distributed): maximal contiguous token runs covered by 8-token
-    // windows occurring >= 2 times corpus-wide. Runs the PRODUCTION hashed-gram
-    // path (shuffles move 8-byte longs): the oracle replays the output
-    // SPANS, not gram identity, and spans are hash-representation-free
-    // (PipelineSpec proves hashed == string on this corpus; a divergence
-    // needs a real xxhash64 collision). ----------------------------------
+    // windows occurring >= 2 times corpus-wide. Shuffles move 8-byte
+    // hashed grams: the oracle replays the output SPANS, not gram
+    // identity (a divergence needs a real xxhash64 collision). ----------
     "d12_dup_spans" -> ((s, d) =>
       Dedup.duplicateSpans(Tables.documents(s, d), "doc_id", "text",
-          k = 8, minOccurrences = 2, hashGrams = true)
+          k = 8, minOccurrences = 2)
         .orderBy(col("doc_id"), col("span_start"))),
 
     // -- ExactSubstr REMOVAL (the paper's action: cut duplicated spans
     // out of the text, don't drop docs); narrow index-aware cut over
-    // the sparse span list, production hashed-gram span path ----------
+    // the sparse span list ----------------------------------------------
     "d18_span_removal" -> ((s, d) =>
       Dedup.removeDuplicateSpans(Tables.documents(s, d), "doc_id", "text",
-          k = 8, minOccurrences = 2, hashGrams = true)
+          k = 8, minOccurrences = 2)
         .orderBy(col("doc_id"))),
 
     // -- corpus-trained bigram LM score (CCNet-style perplexity filter);
-    // production hashed-token path for the same reason as d12: the
-    // oracle replays scores, which depend only on counts. ----------------
+    // tokens are hashed for the same reason as d12: the oracle replays
+    // scores, which depend only on counts. -------------------------------
     "t11_lm_score" -> ((s, d) =>
-      LanguageModel.bigramLogLikelihood(Tables.documents(s, d), "doc_id", "text",
-          hashTokens = true)
+      LanguageModel.bigramLogLikelihood(Tables.documents(s, d), "doc_id", "text")
         .orderBy(col("doc_id"))),
 
     // -- corpus DATASHEET: the one-row "data card" profile a release
@@ -1570,7 +1562,7 @@ object PipelineQueries {
     // -- per-document n-gram NOVELTY: fraction of a doc's tri-grams
     // whose corpus-wide FIRST owner (min doc_id) is the doc itself — the
     // "how much does this doc add" curation signal (dedup-adjacent but
-    // graded). One gram-keyed shuffle; hashGrams applies at scale. -----
+    // graded). One gram-keyed shuffle. --------------------------------
     "t24_gram_novelty" -> ((s, d) => {
       val grams = Tables.documents(s, d).select(col("doc_id"),
         explode(Dedup.wordShingles(col("text"), 3)).as("g"))
@@ -1587,11 +1579,10 @@ object PipelineQueries {
 
     // -- interpolated TRIGRAM LM score (Jelinek–Mercer λ=0.6/0.3/0.1):
     // the order-up form of t11 — three vocabulary-sized count tables,
-    // narrow trigram gen, hashed-token production path; the oracle
+    // narrow trigram gen, hashed token keys; the oracle
     // replays all three orders and the fixed-order mixture exactly. ------
     "t22_trigram_lm" -> ((s, d) =>
-      LanguageModel.trigramInterpolatedLL(Tables.documents(s, d), "doc_id",
-          "text", hashTokens = true)
+      LanguageModel.trigramInterpolatedLL(Tables.documents(s, d), "doc_id", "text")
         .orderBy(col("doc_id"))),
 
     // -- PCA CONTRACT, gate-enforced: components orthonormal, variances
@@ -1660,10 +1651,10 @@ object PipelineQueries {
 
     // -- Moore-Lewis cross-entropy data selection: target LM = the 'en'
     // subset, general LM = whole corpus; per-doc in-domain score.
-    // Production hashed-token path; the oracle replays the counts. ------
+    // Hashed token keys; the oracle replays the counts. ----------------
     "t14_moore_lewis" -> ((s, d) =>
       LanguageModel.mooreLewisScore(Tables.documents(s, d), "doc_id", "text",
-          targetCond = col("lang") === "en", hashTokens = true)
+          targetCond = col("lang") === "en")
         .orderBy(col("doc_id"))),
 
     // -- winnowing fingerprint CONTRACT, gate-enforced (the t04 digest's
@@ -2212,9 +2203,8 @@ object PipelineQueries {
         col("doc_id"))),
 
     // -- Gopher repetition battery: top-{2,3,4}-gram character
-    // fractions, one gram-keyed shuffle for all three n, production
-    // hashed-gram path (oracle replays the string form — output depends
-    // only on counts and lengths, the d12/t11 pattern). ------------------
+    // fractions, counted per row by the native kernel (no shuffle); the
+    // oracle replays the string-gram exchange form. ---------------------
     "t18_gopher_repetition" -> ((s, d) =>
       // orderByStaged: narrow native top-gram pass under a global sort
       SortStage.orderByStaged(
@@ -2231,7 +2221,7 @@ object PipelineQueries {
       // window's own materialized exchange, so the extra staging
       // exchange bought nothing. Plain orderBy kept.
       LanguageModel.perplexityBuckets(Tables.documents(s, d),
-          "doc_id", "text", "lang", nBuckets = 3, hashTokens = true)
+          "doc_id", "text", "lang", nBuckets = 3)
         .select(col("doc_id"), col("lang"), col("ll"),
           when(col("bucket") === 1, "head")
             .when(col("bucket") === 2, "middle")
@@ -2247,7 +2237,7 @@ object PipelineQueries {
       // orderByStaged (same rationale as t19)
       SortStage.orderByStaged(
         LanguageModel.perplexityBucketsScalable(Tables.documents(s, d),
-          "doc_id", "text", "lang", nBuckets = 3, hashTokens = true)
+          "doc_id", "text", "lang", nBuckets = 3)
         .select(col("doc_id"), col("lang"), col("ll"),
           when(col("bucket") === 1, "head")
             .when(col("bucket") === 2, "middle")

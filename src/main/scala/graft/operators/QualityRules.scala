@@ -15,9 +15,8 @@ import org.apache.spark.sql.functions._
   *    stage at any corpus size.
   *  - [[topNgramCharFractions]]: the repetition battery's top-n-gram
   *    character fractions (fraction of the document's characters
-  *    covered by its most repeated n-gram), one gram-keyed shuffle for
-  *    all requested n at once, with the same `hashGrams` 100 TB switch
-  *    as `Dedup.duplicateSpans` (shuffle 8-byte longs, not strings).
+  *    covered by its most repeated n-gram), counted per row by a native
+  *    kernel — no shuffle.
   *
   * The reference has no quality-rule layer (it stops at the Value/Group
   * data model); this extends the LLM-pipeline pack alongside
@@ -98,10 +97,10 @@ object QualityRules {
     * codegen'd [[graft.plans.TopGramMassExpression]] (exact UTF8 gram
     * comparison, no hash-collision caveat): one narrow projection,
     * shuffle volume independent of the corpus. The relational
-    * grams-exchange form this replaced ([[topNgramCharFractionsRelational]],
-    * kept as the parity witness + oracle documentation) was the worst
-    * sf1 scaler in the benchmark (3.95× at 10× data) purely from
-    * shuffling every document's gram stream.
+    * grams-exchange form this replaced (kept in the test tree as the
+    * parity witness `ParityWitnesses.topNgramCharFractionsRelational`)
+    * was the worst sf1 scaler in the benchmark (3.95× at 10× data)
+    * purely from shuffling every document's gram stream.
     *
     * @return idCol, `chars`, and per n: `top{n}_frac` (floor-rounded to
     *         4 decimals) and `r_top{n}` (true = within threshold)
@@ -119,47 +118,6 @@ object QualityRules {
         (frac <= topNgramThresholds.getOrElse(n, 1.0)).as(s"r_top$n"))
     }
     base.select((col(idCol) +: col("__chars").cast("long").as("chars") +: cols): _*)
-  }
-
-  /** The relational (grams-exchange) form of [[topNgramCharFractions]] —
-    * gram stream exploded and counted through a (doc, n, gram)-keyed
-    * exchange, `hashGrams` projecting xxhash64 before the shuffle. Kept
-    * as the parity witness (PlanExprSpec asserts equality with the
-    * narrow native form corpus-wide) and as the shape the DuckDB oracle
-    * documents; production callers want [[topNgramCharFractions]]. */
-  def topNgramCharFractionsRelational(df: DataFrame, idCol: String, textCol: String,
-      ns: Seq[Int] = Seq(2, 3, 4), hashGrams: Boolean = false): DataFrame = {
-    require(ns.nonEmpty && ns.forall(_ >= 1), s"bad n list: $ns")
-    val toks = split(col(textCol), " ")
-    val base = df.select(col(idCol).as("id"), toks.as("t"),
-      length(col(textCol)).cast("double").as("chars"))
-    def gramKey(c: Column): Column = if (hashGrams) xxhash64(c) else c
-    val grams = ns.map { n =>
-      base.select(col("id"), lit(n).as("n"),
-        explode(when(size(col("t")) >= n,
-          transform(sequence(lit(0), size(col("t")) - n),
-            i => array_join(slice(col("t"), i + 1, lit(n)), " ")))
-          .otherwise(array())).as("g"))
-        .select(col("id"), col("n"), gramKey(col("g")).as("gk"),
-          length(col("g")).as("glen"))
-    }.reduce(_.unionByName(_))
-    val counted = grams.groupBy(col("id"), col("n"), col("gk"))
-      .agg(count(lit(1)).as("cnt"), first(col("glen")).as("glen"))
-    val mass = counted.filter(col("cnt") >= 2)
-      .groupBy(col("id"), col("n"))
-      .agg(max(col("cnt") * col("glen")).as("mass"))
-    val wide = mass.groupBy(col("id"))
-      .pivot("n", ns)
-      .agg(first(col("mass")))
-    val out = base.select(col("id"), col("chars"))
-      .join(wide, Seq("id"), "left_outer")
-    val cols = ns.flatMap { n =>
-      val frac = coalesce(col(s"$n"), lit(0L)).cast("double") / col("chars")
-      Seq((floor(frac * 10000 + lit(0.5)) / 10000).as(s"top${n}_frac"),
-        (frac <= topNgramThresholds.getOrElse(n, 1.0)).as(s"r_top$n"))
-    }
-    out.select((col("id").as(idCol) +: col("chars").cast("long").as("chars") +:
-      cols): _*)
   }
 
   /** Gopher A1.1 top-n-gram character-fraction thresholds. */

@@ -7,7 +7,7 @@ import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Fused single-pass HTML main-content extraction — the native twin of
-  * the regex battery in [[graft.functions.TextFunctions.htmlExtractRegex]]
+  * the regex battery in `ParityWitnesses.htmlExtractRegex` (test tree)
   * (script/style/comment strip → block split → per-block tag strip +
   * entity decode + whitespace collapse + link-density filter → join).
   *

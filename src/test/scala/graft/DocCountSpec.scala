@@ -60,4 +60,34 @@ class DocCountSpec extends AnyFunSuite {
       s"README Status says '${m.get.matched}' but mirrorSet holds $n — " +
         "update the Status section")
   }
+
+  test("every runMain recipe in the docs names an object with a main") {
+    // a deleted or renamed main must not leave a recipe behind; round
+    // history (OPTIMIZATION_r*.md, plans/) is deliberately unchecked
+    val mains: Set[String] = {
+      val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+      try {
+        import scala.jdk.CollectionConverters._
+        files.iterator().asScala.filter(_.toString.endsWith(".scala")).flatMap { f =>
+          val src = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
+          val pkg = """(?m)^package\s+([\w.]+)""".r.findFirstMatchIn(src).map(_.group(1))
+          // each top-level object's text runs to the next top-level object
+          val objs = """(?m)^object\s+(\w+)""".r.findAllMatchIn(src).toSeq
+          objs.zipWithIndex.collect {
+            case (m, i) if src.substring(m.start,
+                if (i + 1 < objs.size) objs(i + 1).start else src.length)
+                .contains("def main(") =>
+              pkg.fold(m.group(1))(_ + "." + m.group(1))
+          }
+        }.toSet
+      } finally files.close()
+    }
+    assert(mains.contains("graft.Verify"), s"main scan found only $mains")
+    val stale = Seq("README.md", "COVERAGE.md", ".claude/skills/verify/SKILL.md")
+      .flatMap { doc =>
+        """runMain\s+(graft\.[\w.]*\w)""".r.findAllMatchIn(repoFile(doc))
+          .map(_.group(1)).filterNot(mains).map(o => s"$doc: runMain $o")
+      }.distinct
+    assert(stale.isEmpty, s"recipes name objects with no main: ${stale.mkString("; ")}")
+  }
 }

@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** BYTE-PARITY pin for the fused native html_extract kernel
   * ([[graft.plans.HtmlExtract]]) against the original regex battery
-  * ([[TextFunctions.htmlExtractRegex]]) — the shape the t31/p01/st17
+  * ([[ParityWitnesses.htmlExtractRegex]]) — the shape the t31/p01/st17
   * DuckDB oracles replay char-for-char. Two layers:
   *
   *  1. adversarial unit cases aimed at every semantic subtlety the
@@ -31,7 +31,7 @@ class HtmlExtractParitySpec extends AnyFunSuite with CacheHygiene {
   private def both(html: String, minChars: Int = 25): (String, String) = {
     val r = Seq(Tuple1(html)).toDF("h")
       .select(TextFunctions.htmlExtract(col("h"), minChars).as("n"),
-        TextFunctions.htmlExtractRegex(col("h"), minChars).as("o"))
+        ParityWitnesses.htmlExtractRegex(col("h"), minChars).as("o"))
       .head()
     (r.getString(0), r.getString(1))
   }
@@ -126,7 +126,7 @@ class HtmlExtractParitySpec extends AnyFunSuite with CacheHygiene {
     pin(s"$filler") // no tags at all: one block
     val r = Seq(Tuple1(null: String)).toDF("h")
       .select(TextFunctions.htmlExtract(col("h")).as("n"),
-        TextFunctions.htmlExtractRegex(col("h")).as("o")).head()
+        ParityWitnesses.htmlExtractRegex(col("h")).as("o")).head()
     assert(r.isNullAt(0) && r.isNullAt(1))
   }
 
@@ -136,7 +136,7 @@ class HtmlExtractParitySpec extends AnyFunSuite with CacheHygiene {
         .select(col("doc_id"), PipelineQueries.stagedHtml.as("html"))
       val diff = docs.select(col("doc_id"),
           TextFunctions.htmlExtract(col("html")).as("n"),
-          TextFunctions.htmlExtractRegex(col("html")).as("o"))
+          ParityWitnesses.htmlExtractRegex(col("html")).as("o"))
         .filter(not(col("n") <=> col("o")))
         .count()
       assert(diff == 0L, s"$sf: $diff documents diverge from the regex form")

@@ -1688,24 +1688,23 @@ class PipelineSpec extends AnyFunSuite with CacheHygiene {
       df.select(col("doc_id"), col("lang"), col("ll"), col("bucket").cast("long"))
         .as[(Long, String, Double, Long)].collect().sortBy(_._1).toSeq
     val window = norm(LanguageModel.perplexityBuckets(
-      docs, "doc_id", "text", "lang", nBuckets = 3, hashTokens = true))
+      docs, "doc_id", "text", "lang", nBuckets = 3))
     val scalable = norm(LanguageModel.perplexityBucketsScalable(
-      docs, "doc_id", "text", "lang", nBuckets = 3, hashTokens = true))
+      docs, "doc_id", "text", "lang", nBuckets = 3))
     assert(window.nonEmpty && scalable == window,
       "prefix-sum ntile must equal the window form row-for-row")
     // rank depends only on the total order: identical under a different
     // input partitioning
     val repart = norm(LanguageModel.perplexityBucketsScalable(
-      docs.repartition(7), "doc_id", "text", "lang", nBuckets = 3,
-      hashTokens = true))
+      docs.repartition(7), "doc_id", "text", "lang", nBuckets = 3))
     assert(repart == window, "partition layout must not change buckets")
     // closed-form ntile arithmetic: small-group edge (cnt < n -> one row
     // per bucket) via a 2-doc class against the window form
     val tiny = docs.filter(col("doc_id") < 2)
     val w2 = norm(LanguageModel.perplexityBuckets(
-      tiny, "doc_id", "text", "lang", nBuckets = 3, hashTokens = true))
+      tiny, "doc_id", "text", "lang", nBuckets = 3))
     val s2 = norm(LanguageModel.perplexityBucketsScalable(
-      tiny, "doc_id", "text", "lang", nBuckets = 3, hashTokens = true))
+      tiny, "doc_id", "text", "lang", nBuckets = 3))
     assert(s2 == w2, "cnt < nBuckets edge must match SQL ntile")
   }
 
@@ -1732,13 +1731,22 @@ class PipelineSpec extends AnyFunSuite with CacheHygiene {
   }
 
   test("duplicateSpans/Stats: hashed-gram shuffle (100 TB shape) == string grams") {
+    // hand-computed on string grams, k = 8: doc 2 repeats doc 1's only
+    // window at position 0, so both carry span (0, 7); doc 3 is shorter
+    // than one window
+    val tiny = Seq((1L, "a b c d e f g h"), (2L, "a b c d e f g h x y"),
+      (3L, "p q r")).toDF("doc_id", "text")
+    val tinySpans = Dedup.duplicateSpans(tiny, "doc_id", "text", k = 8)
+      .as[(Long, Long, Long)].collect().toSet
+    assert(tinySpans == Set((1L, 0L, 7L), (2L, 0L, 7L)), s"spans: $tinySpans")
+    val tinyStats = Dedup.duplicateSpanStats(tiny, "doc_id", "text", k = 8)
+      .orderBy("doc_id").as[(Long, Long, Long, Double)].collect().toSeq
+    assert(tinyStats == Seq((1L, 8L, 8L, 1.0), (2L, 10L, 8L, 0.8),
+      (3L, 3L, 0L, 0.0)), s"stats: $tinyStats")
     val docs = Tables.documents(spark, sfDir)
-    val plain = Dedup.duplicateSpans(docs, "doc_id", "text", k = 8,
-      hashGrams = false).as[(Long, Long, Long)].collect().toSet
-    val hashed = Dedup.duplicateSpans(docs, "doc_id", "text", k = 8,
-      hashGrams = true).as[(Long, Long, Long)].collect().toSet
-    assert(plain.nonEmpty, "corpus should contain duplicated spans (d01 dups)")
-    assert(hashed == plain, "xxhash64 gram projection must not change spans")
+    val spans = Dedup.duplicateSpans(docs, "doc_id", "text", k = 8)
+      .as[(Long, Long, Long)].collect().toSet
+    assert(spans.nonEmpty, "corpus should contain duplicated spans (d01 dups)")
     // stats: dup_frac in [0,1], exact-dup docs (same text twice) are 1.0
     val stats = Dedup.duplicateSpanStats(docs, "doc_id", "text", k = 8)
     val bad = stats.filter(col("dup_frac") < 0 || col("dup_frac") > 1).count()
@@ -1769,15 +1777,6 @@ class PipelineSpec extends AnyFunSuite with CacheHygiene {
     val ids = LanguageModel.bigramLogLikelihood(short, "doc_id", "text")
       .select("doc_id").as[Long].collect().toSet
     assert(ids == Set(2L), s"1-token doc must be absent, got $ids")
-
-    // the 100 TB switch: xxhash64-keyed counts give identical scores
-    val corpus = Tables.documents(spark, sfDir)
-    val plain = LanguageModel.bigramLogLikelihood(corpus, "doc_id", "text",
-      hashTokens = false).as[(Long, Long, Double)].collect().toSet
-    val hashed = LanguageModel.bigramLogLikelihood(corpus, "doc_id", "text",
-      hashTokens = true).as[(Long, Long, Double)].collect().toSet
-    assert(plain.nonEmpty && hashed == plain,
-      "hashed-token LM must score identically to string-token LM")
   }
 
   test("splits: deterministic, partition-invariant, proportional, key-coherent") {
@@ -1870,7 +1869,7 @@ class PipelineSpec extends AnyFunSuite with CacheHygiene {
       rows.count(_.getBoolean(6)))
   }
 
-  test("top-ngram fractions: known repetition mass, hashed == plain on the corpus") {
+  test("top-ngram fractions: known repetition mass, native == relational on the corpus") {
     import graft.operators.QualityRules
     // "ab ab ab cd" : bigram 'ab ab' occurs 2x (len 5) -> mass 10, chars 11
     val one = Seq(1L -> "ab ab ab cd").toDF("doc_id", "text")
@@ -1883,17 +1882,15 @@ class PipelineSpec extends AnyFunSuite with CacheHygiene {
     val r3 = QualityRules.topNgramCharFractions(one, "doc_id", "text", Seq(3))
       .select(col("top3_frac")).head().getDouble(0)
     assert(r3 == 0.0, s"expected 0 trigram mass, got $r3")
-    // native narrow form == relational exchange form (both gram-key
-    // variants) corpus-wide; the native plan carries no Exchange
+    // native narrow form == relational string-gram exchange form
+    // corpus-wide; the native plan carries no Exchange
     val corpus = Tables.documents(spark, sfDir)
     val native = QualityRules.topNgramCharFractions(corpus, "doc_id", "text")
       .orderBy("doc_id").collect().toSeq
-    val plain = QualityRules.topNgramCharFractionsRelational(corpus, "doc_id", "text")
-      .orderBy("doc_id").collect().toSeq
-    val hashed = QualityRules.topNgramCharFractionsRelational(corpus, "doc_id", "text",
-      hashGrams = true).orderBy("doc_id").collect().toSeq
-    assert(plain == hashed, "hashed-gram fractions must reproduce string-gram result")
-    assert(native == plain, "native per-row form must reproduce the relational result")
+    val relational = ParityWitnesses.topNgramCharFractionsRelational(corpus,
+      "doc_id", "text").orderBy("doc_id").collect().toSeq
+    assert(native == relational,
+      "native per-row form must reproduce the relational result")
     assert(native.exists(_.getDouble(2) > 0), "corpus should have SOME repeated bigrams")
     val plan = QualityRules.topNgramCharFractions(corpus, "doc_id", "text")
       .queryExecution.executedPlan.toString
@@ -1905,7 +1902,7 @@ class PipelineSpec extends AnyFunSuite with CacheHygiene {
     import graft.operators.LanguageModel
     val docs = Tables.documents(spark, sfDir)
     val b = LanguageModel.perplexityBuckets(docs, "doc_id", "text", "lang",
-      nBuckets = 3, hashTokens = true)
+      nBuckets = 3)
     val sizes = b.groupBy("lang", "bucket").count()
       .collect().map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2)).toMap
     val langs = sizes.keys.map(_._1).toSet
@@ -1979,25 +1976,18 @@ class PipelineSpec extends AnyFunSuite with CacheHygiene {
       s"wrong span removal: $out")
     // law: n_kept == n_toks - dup_toks from duplicateSpanStats, corpus-wide
     val corpus = Tables.documents(spark, sfDir)
-    val removed = Dedup.removeDuplicateSpans(corpus, "doc_id", "text",
-      k = 8, hashGrams = true)
-    val stats = Dedup.duplicateSpanStats(corpus, "doc_id", "text",
-      k = 8, hashGrams = true)
+    val removed = Dedup.removeDuplicateSpans(corpus, "doc_id", "text", k = 8)
+    val stats = Dedup.duplicateSpanStats(corpus, "doc_id", "text", k = 8)
     val viol = removed.join(stats, "doc_id")
       .filter(col("n_kept") =!= col("n_toks") -
         coalesce(col("dup_toks"), lit(0L)))
       .count()
     assert(viol == 0, s"$viol docs break n_kept == n_toks - dup_toks")
-    // 100 TB switch parity on the corpus
-    val plain = Dedup.removeDuplicateSpans(corpus, "doc_id", "text", k = 8)
-      .orderBy("doc_id").as[(Long, Long, String)].collect().toSeq
-    val hashed = removed.orderBy("doc_id").as[(Long, Long, String)].collect().toSeq
-    assert(plain.exists(r => r._2 == 0 || r._3.isEmpty) ||
-      plain.map(_._2).sum < corpus.select(
+    val kept = removed.as[(Long, Long, String)].collect().toSeq
+    assert(kept.exists(r => r._2 == 0 || r._3.isEmpty) ||
+      kept.map(_._2).sum < corpus.select(
         sum(size(split(col("text"), " ")))).as[Long].head(),
       "corpus must actually lose duplicated spans (vacuous test?)")
-    assert(hashed == plain,
-      "hashed-gram span removal must reproduce the string-gram result")
   }
 
   test("paragraph dedup: boilerplate dropped everywhere, order kept, hashed == plain") {
@@ -2021,22 +2011,17 @@ class PipelineSpec extends AnyFunSuite with CacheHygiene {
         minOccurrences = 3)
       .orderBy("doc_id").select("n_kept").as[Long].collect().toSeq
     assert(spared == Seq(3L, 3L), "below-threshold paragraphs must survive")
-    // 100 TB switch: xxhash64-keyed shuffles == paragraph-string shuffles
-    // on the real corpus (10-token pseudo-paragraph form, as in the gate)
+    // the real corpus (10-token pseudo-paragraph form, as in the gate)
     val toks = split(col("text"), " ")
     val nChunks = ((size(toks) + lit(9)) / lit(10)).cast("int")
     val chunked = Tables.documents(spark, sfDir).select(col("doc_id"),
       array_join(transform(sequence(lit(0), nChunks - 1),
         i => array_join(slice(toks, i * lit(10) + lit(1), lit(10)), " ")),
         "\n").as("text"))
-    val plain = Dedup.dropDuplicateParagraphs(chunked, "doc_id", "text")
+    val kept = Dedup.dropDuplicateParagraphs(chunked, "doc_id", "text")
       .orderBy("doc_id").as[(Long, Long, String)].collect().toSeq
-    val hashed = Dedup.dropDuplicateParagraphs(chunked, "doc_id", "text",
-        hashParagraphs = true)
-      .orderBy("doc_id").as[(Long, Long, String)].collect().toSeq
-    assert(plain.nonEmpty && hashed == plain,
-      "hashed-paragraph shuffle must reproduce the string-keyed result")
-    assert(plain.exists(_._2 == 0) || plain.map(_._2).sum <
+    assert(kept.nonEmpty)
+    assert(kept.exists(_._2 == 0) || kept.map(_._2).sum <
       chunked.select(sum(size(split(col("text"), "\n")))).as[Long].head(),
       "corpus must actually lose duplicated paragraphs (vacuous test?)")
   }
@@ -2847,31 +2832,37 @@ class PipelineSpec extends AnyFunSuite with CacheHygiene {
     assert(scores("t") > 0 && scores("g") < 0,
       s"signs should separate domains here: $scores")
 
-    // the 100 TB switch: hashed token keys give identical scores
-    val corpus = Tables.documents(spark, sfDir)
-    val plain = LanguageModel.mooreLewisScore(corpus, "doc_id", "text",
-      col("lang") === "en", hashTokens = false)
-      .as[(Long, Long, Double)].collect().toSet
-    val hashed = LanguageModel.mooreLewisScore(corpus, "doc_id", "text",
-      col("lang") === "en", hashTokens = true)
-      .as[(Long, Long, Double)].collect().toSet
-    assert(plain.nonEmpty && hashed == plain,
-      "hashed-token Moore-Lewis must score identically")
+    // hand-computed: target = doc 1 "a b"; general = "a b" + "a c".
+    // general: cb(a,b)=cb(a,c)=1, ch(a)=2, V=3; target: cb(a,b)=1,
+    // ch(a)=1, V=2; the unseen target bigram (a,c) counts 0
+    val tiny = Seq((1L, "t", "a b"), (2L, "g", "a c"))
+      .toDF("doc_id", "dom", "text")
+    def r4(x: Double) = math.floor(x * 10000 + 0.5) / 10000
+    val got = LanguageModel.mooreLewisScore(tiny, "doc_id", "text",
+        targetCond = col("dom") === "t")
+      .orderBy("doc_id").as[(Long, Long, Double)].collect().toSeq
+    assert(got == Seq(
+      (1L, 1L, r4(math.log(2.0 / 3) - math.log(2.0 / 5))),
+      (2L, 1L, r4(math.log(1.0 / 3) - math.log(2.0 / 5)))), s"got $got")
   }
 
   test("dupNgramFraction: hashed-gram shuffle (100 TB shape) == string grams") {
-    val docs = Tables.documents(spark, sfDir)
-    def rows(hashed: Boolean) =
-      Dedup.dupNgramFraction(docs, "text", "doc_id", 8, hashGrams = hashed)
+    def rows(docs: org.apache.spark.sql.DataFrame, n: Int) =
+      Dedup.dupNgramFraction(docs, "text", "doc_id", n)
         .select(col("doc_id"), col("n_grams"), col("n_dup"), col("dup_frac"))
         .as[(Long, Long, Long, Double)].collect().sortBy(_._1).toSeq
-    val str = rows(hashed = false)
-    val hsh = rows(hashed = true)
-    assert(str.nonEmpty, "no docs with >= 8 tokens?")
-    assert(str == hsh, "xxhash64 gram projection changed the result")
+    // hand-computed on string bigrams: "a b" is in docs 1 and 2; doc 4
+    // repeats its own bigram, which counts once (distinct per doc) and
+    // so is not a cross-document duplicate
+    val tiny = Seq((1L, "a b c"), (2L, "a b d"), (3L, "x y"), (4L, "p q p q"))
+      .toDF("doc_id", "text")
+    assert(rows(tiny, 2) == Seq((1L, 2L, 1L, 0.5), (2L, 2L, 1L, 0.5),
+      (3L, 1L, 0L, 0.0), (4L, 2L, 0L, 0.0)))
+    val corpus = rows(Tables.documents(spark, sfDir), 8)
+    assert(corpus.nonEmpty, "no docs with >= 8 tokens?")
     // the signal actually fires: the corpus has planted near-dups, so some
     // docs must have a nonzero cross-doc duplicate fraction
-    assert(str.exists(_._4 > 0), "no cross-document duplicate 8-grams found")
+    assert(corpus.exists(_._4 > 0), "no cross-document duplicate 8-grams found")
   }
 
   test("upsample2x: hand goldens, truncation toward zero, length law") {
@@ -3010,12 +3001,19 @@ class PipelineSpec extends AnyFunSuite with CacheHygiene {
     // average strictly above every non-target class
     for (l <- byLang.keys if l != "en")
       assert(byLang("en") > byLang(l), s"en=${byLang("en")} <= $l=${byLang(l)}")
-    // the paper's hashed-feature form is count-identical up to collisions
-    val hashed = LanguageModel.dsirLogWeight(docs, "doc_id", "text",
-      col("lang") === "en", hashGrams = true)
-      .as[(Long, Long, Double)].collect().sortBy(_._1).toSeq
-    val plain = lw.as[(Long, Long, Double)].collect().sortBy(_._1).toSeq
-    assert(plain == hashed, "xxhash64 gram projection changed DSIR weights")
+    // hand-computed on string bigrams: raw = (a,b),(a,c) so total 2 and
+    // B = 2 distinct; target = doc 1's (a,b), total 1; doc 3 has no
+    // bigram and keeps log w = 0
+    val tiny = Seq((1L, "t", "a b"), (2L, "g", "a c"), (3L, "g", "z"))
+      .toDF("doc_id", "dom", "text")
+    def r4(x: Double) = math.floor(x * 10000 + 0.5) / 10000
+    val got = LanguageModel.dsirLogWeight(tiny, "doc_id", "text",
+        col("dom") === "t")
+      .orderBy("doc_id").as[(Long, Long, Double)].collect().toSeq
+    assert(got == Seq(
+      (1L, 1L, r4(math.log(2.0 / 3) - math.log(2.0 / 4))),
+      (2L, 1L, r4(math.log(1.0 / 3) - math.log(2.0 / 4))),
+      (3L, 0L, 0.0)), s"got $got")
   }
 
   test("DSIR sample: exact k, deterministic, salt-sensitive, loud on empty target") {
@@ -3060,11 +3058,38 @@ class PipelineSpec extends AnyFunSuite with CacheHygiene {
     val docs = (1 to 80).map(i =>
       (i.toLong, (0 to 12).map(j => s"w${(i * 7 + j * 3) % 15}").mkString(" ")))
       .toDF("id", "text")
-    val plain = LanguageModel.trigramInterpolatedLL(docs, "id", "text")
-      .as[(Long, Long, Double)].collect().toSet
-    val hashed = LanguageModel.trigramInterpolatedLL(docs, "id", "text",
-      hashTokens = true).as[(Long, Long, Double)].collect().toSet
-    assert(plain == hashed)
+    // plain-token reference: the same counts and mixture over the token
+    // strings, computed on the driver
+    val texts = (1 to 80).map(i =>
+      i.toLong -> (0 to 12).map(j => s"w${(i * 7 + j * 3) % 15}"))
+    val tri = for ((id, t) <- texts; i <- 0 to t.size - 3)
+      yield (id, (t(i), t(i + 1), t(i + 2)))
+    val bi = for ((_, t) <- texts; i <- 0 to t.size - 2) yield (t(i), t(i + 1))
+    val toks = texts.flatMap(_._2)
+    val c3 = tri.groupBy(_._2).map { case (g, v) => g -> v.size }
+    val ch3 = c3.toSeq.groupBy { case ((a, b, _), _) => (a, b) }
+      .map { case (h, v) => h -> v.map(_._2).sum }
+    val cb = bi.groupBy(identity).map { case (g, v) => g -> v.size }
+    val chb = cb.toSeq.groupBy(_._1._1).map { case (h, v) => h -> v.map(_._2).sum }
+    val cu = toks.groupBy(identity).map { case (w, v) => w -> v.size }
+    val (nTok, vocab) = (toks.size, cu.size)
+    val want = tri.groupBy(_._1).map { case (id, ts) =>
+      val lls = ts.map { case (_, (a, b, c)) =>
+        math.log(0.6 * ((c3((a, b, c)) + 1.0) / (ch3((a, b)) + vocab)) +
+          0.3 * ((cb((b, c)) + 1.0) / (chb(b) + vocab)) +
+          0.1 * ((cu(c) + 1.0) / (nTok + vocab)))
+      }
+      id -> (ts.size.toLong, lls.sum / ts.size)
+    }
+    val got = LanguageModel.trigramInterpolatedLL(docs, "id", "text")
+      .as[(Long, Long, Double)].collect()
+    assert(got.map(_._1).toSet == want.keySet)
+    // the avg's summation order may differ from the driver's, so the
+    // floor-rounded score may land one quantum off at a boundary
+    got.foreach { case (id, n, ll) =>
+      assert(n == want(id)._1 && math.abs(ll - want(id)._2) <= 1.0001e-4,
+        s"doc $id: got ($n, $ll), want ${want(id)}")
+    }
     intercept[IllegalArgumentException] {
       LanguageModel.trigramInterpolatedLL(docs, "id", "text",
         lambdas = (0.5, 0.2, 0.1))

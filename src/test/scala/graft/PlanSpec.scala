@@ -918,6 +918,28 @@ class PlanSpec extends AnyFunSuite with CacheHygiene {
         executedParts(c.relation.cachedPlan, seen)
     }.flatten
 
+  test("d11/d12/d17/d21/t11/t20: gram, token and paragraph exchanges key on longs") {
+    // the shuffle-bytes shape at 100 TB: every exchange keyed on a gram,
+    // token or paragraph moves its xxhash64 (8 bytes), never the string
+    val contentKeys = Set("g", "gram", "w1", "w2", "__k")
+    val bad = Seq("d11_dup_ngram_fraction", "d12_dup_spans", "d17_paragraph_dedup",
+        "d21_containment", "t11_lm_score", "t20_dsir").flatMap { q =>
+      val keys = executedParts(
+          SparkEntry.queries(q)(spark, sf).queryExecution.executedPlan,
+          scala.collection.mutable.Set.empty[AnyRef])
+        .flatMap(_.collect { case e: ShuffleExchangeExec => e.outputPartitioning })
+        .collect { case h: org.apache.spark.sql.catalyst.plans.physical.HashPartitioning =>
+          h.expressions }
+        .flatten
+        .collect { case a: org.apache.spark.sql.catalyst.expressions.Attribute
+          if contentKeys(a.name) => a }
+      assert(keys.nonEmpty, s"$q: no gram/token/paragraph-keyed exchange found")
+      keys.filterNot(_.dataType == org.apache.spark.sql.types.LongType)
+        .map(a => s"$q ${a.name}: ${a.dataType.simpleString}").distinct
+    }
+    assert(bad.isEmpty, s"exchange keys not hashed to longs: ${bad.mkString(", ")}")
+  }
+
   /** With AQE on, run the pair frame of `build` under an explicit cap
     * above every fixture bucket (the census runs, nothing is dropped, so
     * AQE cannot prune empty branches) and return the work it repeated:
